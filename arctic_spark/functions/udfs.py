@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf, pandas_udf
 
+from ..errors import ComputeError
 from ..geom import algos, batch, boolean, geojson, wkb, wkt
 from ..geom.ragged import MISSING, RaggedGeometry
 from ..sparktypes import GEOM_TYPE, GEOM_TYPE_Z
@@ -78,28 +79,39 @@ def ragged_from_arrow(sa) -> RaggedGeometry:
     return RaggedGeometry(gt, xs, ys, co, rings, ro, parts, po)
 
 
+def int32_offsets(offsets: np.ndarray, field: str) -> np.ndarray:
+    """List offsets as the int32 array an Arrow ``list`` stores. Raises
+    ComputeError naming ``field`` when the last offset does not fit,
+    instead of letting the cast wrap into a corrupt array."""
+    if len(offsets) and offsets[-1] >= 2 ** 31:
+        raise ComputeError(
+            f"GEOM field {field!r}: {int(offsets[-1])} values in one "
+            "batch overflow Arrow's int32 list offsets; lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch")
+    return offsets.astype(np.int32)
+
+
 def ragged_to_arrow(rg: RaggedGeometry) -> pa.StructArray:
     """Inverse of :func:`ragged_from_arrow`: the GEOM struct array to
     return from an ``arrow_udf``. MISSING rows become rows of null
     fields (the shape the pandas return path produced), with list
     offsets staying monotone (MISSING rows own empty spans)."""
-    n = len(rg)
     miss = rg.gt == MISSING
     mask = pa.array(miss) if miss.any() else None
 
-    def list_arr(vals, offsets, patype):
+    def list_arr(name, vals, offsets, patype):
         return pa.ListArray.from_arrays(
-            pa.array(offsets.astype(np.int32), pa.int32()),
+            pa.array(int32_offsets(offsets, name), pa.int32()),
             pa.array(np.ascontiguousarray(vals), patype), mask=mask)
 
     gt = pa.array(rg.gt.astype(np.int32), pa.int32(),
                   mask=miss if miss.any() else None)
     return pa.StructArray.from_arrays(
         [gt,
-         list_arr(rg.xs, rg.coord_offsets, pa.float64()),
-         list_arr(rg.ys, rg.coord_offsets, pa.float64()),
-         list_arr(rg.rings, rg.ring_offsets, pa.int32()),
-         list_arr(rg.parts, rg.part_offsets, pa.int32())],
+         list_arr("xs", rg.xs, rg.coord_offsets, pa.float64()),
+         list_arr("ys", rg.ys, rg.coord_offsets, pa.float64()),
+         list_arr("rings", rg.rings, rg.ring_offsets, pa.int32()),
+         list_arr("parts", rg.parts, rg.part_offsets, pa.int32())],
         ["gt", "xs", "ys", "rings", "parts"])
 
 
@@ -376,6 +388,22 @@ def contains(g1: pa.Array, g2: pa.Array) -> pa.Array:
     miss = (r1.gt == MISSING) | (r2.gt == MISSING)
     return pa.array(batch.contains(r1, r2),
                     mask=miss if miss.any() else None)
+
+
+def join_refine(g1, g2, predicate: str, general: bool = True):
+    """The grid spatial join's whole refine as one Arrow kernel
+    (geom/batch.py join_refine: rectangle interval test, boundary-
+    exclusive point-in-polygon, point equality, then the exact kernel —
+    or, with ``general=False``, the exact kernel for convex × convex
+    pairs only). NULL when either side is missing."""
+
+    @arrow_udf(T.BooleanType())
+    def _refine(a: pa.Array, b: pa.Array) -> pa.Array:
+        r1, r2 = ragged_from_arrow(a), ragged_from_arrow(b)
+        miss = (r1.gt == MISSING) | (r2.gt == MISSING)
+        return pa.array(batch.join_refine(r1, r2, predicate, general),
+                        mask=miss if miss.any() else None)
+    return _refine(g1, g2)
 
 
 @arrow_udf(T.DoubleType())

@@ -553,6 +553,185 @@ def overlaps(r1: RaggedGeometry, r2: RaggedGeometry) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
+# spatial-join refine: the per-pair type dispatch of the grid join, with
+# numpy twins of the Catalyst shape flags and ray cast it used to run
+# (functions/native.py: is_axis_rect, is_convex, contains_point)
+# ---------------------------------------------------------------------------
+
+def _take(rg: RaggedGeometry, idx: np.ndarray) -> RaggedGeometry:
+    """Rows ``idx`` of a batch as a new batch."""
+    idx = np.asarray(idx, dtype=np.int64)
+
+    def gather(vals, off):
+        lens = off[idx + 1] - off[idx]
+        new = np.zeros(idx.size + 1, np.int64)
+        np.cumsum(lens, out=new[1:])
+        src = np.repeat(off[idx] - new[:-1], lens) + np.arange(new[-1])
+        return vals[src], new
+
+    xs, co = gather(rg.xs, rg.coord_offsets)
+    ys, _ = gather(rg.ys, rg.coord_offsets)
+    rings, ro = gather(rg.rings, rg.ring_offsets)
+    parts, po = gather(rg.parts, rg.part_offsets)
+    return RaggedGeometry(rg.gt[idx], xs, ys, co, rings, ro, parts, po)
+
+
+def _rect_shape(rg: RaggedGeometry) -> np.ndarray:
+    """Per-geometry: one ring of 5 vertices, every vertex a bbox corner,
+    each of the first four edges changing exactly one axis — the shape
+    test of native.is_axis_rect (and of contains_point's rectangle fast
+    path, which skips the type check)."""
+    out = np.zeros(len(rg), dtype=bool)
+    idx = np.flatnonzero((np.diff(rg.ring_offsets) == 1)
+                         & (np.diff(rg.coord_offsets) == 5))
+    if idx.size:
+        c = rg.coord_offsets[:-1][idx, None] + np.arange(5)
+        x, y = rg.xs[c], rg.ys[c]
+        corners = (((x == x.min(1, keepdims=True))
+                    | (x == x.max(1, keepdims=True))).all(1)
+                   & ((y == y.min(1, keepdims=True))
+                      | (y == y.max(1, keepdims=True))).all(1))
+        rectilinear = ((x[:, :4] == x[:, 1:])
+                       != (y[:, :4] == y[:, 1:])).all(1)
+        out[idx] = corners & rectilinear
+    return out
+
+
+def is_axis_rect(rg: RaggedGeometry) -> np.ndarray:
+    """Vector twin of native.is_axis_rect (False for missing rows)."""
+    return (rg.gt == POLYGON) & _rect_shape(rg)
+
+
+def is_convex(rg: RaggedGeometry) -> np.ndarray:
+    """Vector twin of native.is_convex: a one-ring polygon of >= 4
+    vertices whose consecutive-edge cross products (with wraparound)
+    all share one sign, zeros allowed. Same products in the same order
+    (``ex_i * ey_i+1 - ey_i * ex_i+1``), so ties decide identically."""
+    n = len(rg)
+    co = rg.coord_offsets
+    cand = ((rg.gt == POLYGON) & (np.diff(rg.ring_offsets) == 1)
+            & (np.diff(co) >= 4))
+    if not cand.any():
+        return cand
+    # edge p runs from coordinate p to p + 1; the last coordinate of a
+    # geometry starts no edge, and the last edge wraps to the first
+    gidx = _coord_geom_index(rg)
+    last = np.arange(gidx.size) + 1 == co[gidx + 1]
+    pos = np.flatnonzero(cand[gidx] & ~last)
+    g = gidx[pos]
+    nxt = np.where(pos + 2 == co[g + 1], co[g], pos + 1)
+    ex, ey = rg.xs[pos + 1] - rg.xs[pos], rg.ys[pos + 1] - rg.ys[pos]
+    nx, ny = rg.xs[nxt + 1] - rg.xs[nxt], rg.ys[nxt + 1] - rg.ys[nxt]
+    t = ex * ny - ey * nx
+    # NaN turns fail both "all >= 0" and "all <= 0", as in Catalyst
+    not_all_ge = np.bincount(g, weights=~(t >= 0), minlength=n) > 0
+    not_all_le = np.bincount(g, weights=~(t <= 0), minlength=n) > 0
+    return cand & ~(not_all_ge & not_all_le)
+
+
+def contains_point_strict(poly: RaggedGeometry, px: np.ndarray,
+                          py: np.ndarray, active: np.ndarray) -> np.ndarray:
+    """Vector twin of native.contains_point for pair i = (polygon i,
+    point (px[i], py[i])), on ``active`` pairs: boundary-EXCLUSIVE
+    even-odd ray cast with the parity taken over every ring of the
+    geometry, and the interval test for axis rectangles. Crossing and
+    on-segment tests use the native expression's float formulas term
+    for term, so boundary ties decide identically."""
+    n = len(poly)
+    out = np.zeros(n, dtype=bool)
+    rect = active & _rect_shape(poly)
+    if rect.any():
+        x0, y0, x1, y1 = _bounds_per_geom(poly)
+        out |= rect & (px > x0) & (px < x1) & (py > y0) & (py < y1)
+    ray = active & ~rect
+    if not ray.any():
+        return out
+    ax, ay, bx, by, g, _ = _seg_arrays(poly, ray)
+    qx, qy = px[g], py[g]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cross = (((ay > qy) != (by > qy))
+                 & (qx < ax + (qy - ay) * (bx - ax) / (by - ay)))
+    on = (((qx - ax) * (by - ay) == (qy - ay) * (bx - ax))
+          & (qx >= np.minimum(ax, bx)) & (qx <= np.maximum(ax, bx))
+          & (qy >= np.minimum(ay, by)) & (qy <= np.maximum(ay, by)))
+    odd = np.bincount(g, weights=cross, minlength=n) % 2 == 1
+    on_bdy = np.bincount(g, weights=on, minlength=n) > 0
+    return out | (ray & odd & ~on_bdy)
+
+
+def _point_xy(rg: RaggedGeometry):
+    """First coordinate of every row (NaN where there is none) and the
+    has-a-coordinate mask."""
+    has = np.diff(rg.coord_offsets) > 0
+    px, py = np.full(len(rg), np.nan), np.full(len(rg), np.nan)
+    first = rg.coord_offsets[:-1][has]
+    px[has], py[has] = rg.xs[first], rg.ys[first]
+    return px, py, has
+
+
+def join_refine(r1: RaggedGeometry, r2: RaggedGeometry, predicate: str,
+                general: bool = True) -> np.ndarray:
+    """The grid spatial join's exact refine for candidate pairs
+    (r1[i], r2[i]), ``predicate`` in {'intersects', 'contains'}. Per
+    pair, first match wins:
+
+    - axis rectangle × axis rectangle: closed-interval overlap
+      (intersects) or interval containment (contains, boundary-
+      inclusive);
+    - point × polygon, either order: polygon contains point,
+      boundary-exclusive (the reference's refine table,
+      spatial_index.rs:89-137, delegates both orders and both
+      predicates to it);
+    - point × point: coordinate equality;
+    - any other pair: the exact :func:`intersects` / :func:`contains`
+      kernel when ``general``; otherwise only convex × convex pairs
+      reach that kernel and the rest are False (the join's
+      ``udf_refine=False, convex_refine="kernel"`` mode).
+
+    Pairs with a missing side come back False; callers mask them."""
+    if predicate not in ("intersects", "contains"):
+        raise ValueError(f"join_refine predicate {predicate!r}; use "
+                         "'intersects' or 'contains'")
+    n = len(r1)
+    out = np.zeros(n, dtype=bool)
+    todo = (r1.gt != MISSING) & (r2.gt != MISSING)
+    rect = todo & is_axis_rect(r1) & is_axis_rect(r2)
+    if rect.any():
+        x1n, y1n, x1x, y1x = _bounds_per_geom(r1)
+        x2n, y2n, x2x, y2x = _bounds_per_geom(r2)
+        if predicate == "intersects":
+            ans = (x1n <= x2x) & (x2n <= x1x) & (y1n <= y2x) & (y2n <= y1x)
+        else:
+            ans = (x1n <= x2n) & (x2x <= x1x) & (y1n <= y2n) & (y2x <= y1x)
+        out |= rect & ans
+        todo &= ~rect
+    pt1, pt2 = r1.gt == POINT, r2.gt == POINT
+    pg1, pg2 = np.isin(r1.gt, _POLYISH), np.isin(r2.gt, _POLYISH)
+    if (todo & (pt1 | pt2)).any():
+        px1, py1, has1 = _point_xy(r1)
+        px2, py2, has2 = _point_xy(r2)
+        m = todo & pt1 & pg2
+        if m.any():
+            out |= contains_point_strict(r2, px1, py1, m & has1)
+        m = todo & pt2 & pg1
+        if m.any():
+            out |= contains_point_strict(r1, px2, py2, m & has2)
+        m = todo & pt1 & pt2 & has1 & has2
+        out |= m & (px1 == px2) & (py1 == py2)
+        todo &= ~((pt1 & pg2) | (pt2 & pg1) | (pt1 & pt2))
+    if not general:
+        todo &= is_convex(r1) & is_convex(r2)
+    if todo.any():
+        kern = intersects if predicate == "intersects" else contains
+        if todo.all():
+            out |= kern(r1, r2)
+        else:
+            idx = np.flatnonzero(todo)
+            out[idx] = kern(_take(r1, idx), _take(r2, idx))
+    return out
+
+
+# ---------------------------------------------------------------------------
 # hausdorff / shortest_line (round 6) — vectorized nearest/farthest pair
 # machinery shared with the distance kernel.
 # ---------------------------------------------------------------------------

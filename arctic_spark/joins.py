@@ -12,9 +12,15 @@ the same filter–refine structure but distributes each phase:
 2. **join**: equi-join on cell id — a plain shuffled hash join Catalyst
    plans (AQE skew-join splits hot cells; `broadcast_right=True` short-
    circuits the shuffle for a small dim side);
-3. **refine**: exact predicate — Catalyst-native ray-cast for point/
-   polygon pairs (the dominant case, fully JVM-side), pandas-UDF general
-   kernel otherwise;
+3. **refine**: exact predicate per candidate. If the refine has an
+   Arrow kernel, the kernel is the whole refine: one ``arrow_udf``
+   (``udfs.join_refine``) does the per-pair dispatch in numpy —
+   rectangle interval test, boundary-exclusive point-in-polygon, point
+   equality, exact general predicate — like the reference's one
+   predicate call per R-tree candidate. With ``udf_refine=False`` (and
+   ``convex_refine`` other than "kernel") the refine stays Catalyst-
+   native — ray cast for point/polygon pairs, rect interval algebra,
+   convex SAT — and the plan has no Python node;
 4. **dedup-free reporting**: a candidate pair can meet in several cells;
    only the canonical cell (the one containing the min corner of the
    bbox intersection) reports it, so no distinct()/re-shuffle is needed —
@@ -32,8 +38,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .functions import native
-from .functions.udfs import contains as _contains_udf
-from .functions.udfs import intersects as _intersects_udf
+from .functions.udfs import join_refine as _join_refine_udf
 from .geodataframe import GeoDataFrame
 
 
@@ -67,7 +72,8 @@ def _with_cells(df, geom_col, cell_size, prefix, flags=False,
     one row per covered cell.
 
     Every derived quantity — bounds, the cell array, and (with
-    ``flags=True``) the rect/convex fast-path flags — is computed inside
+    ``flags=True``, for the pure-JVM "sat" refine and ``points_left``)
+    the rect/convex fast-path flags — is computed inside
     ONE ``_let``-bound struct column ``<prefix>meta``. This matters for
     EXPRESSION-BUILT geometry (st.make_polygon over numeric columns, the
     common ingest pattern): Catalyst inlines a computed column into every
@@ -186,15 +192,21 @@ _memo_col = native.memo_col
 
 
 def _refine_predicate(lg, rg, predicate, udf_refine=True):
-    """Exact-predicate column with native fast paths for point/polygon,
-    point/point; general pairs go to the pandas-UDF kernel.
+    """Exact-predicate column for one candidate pair.
 
-    ``udf_refine=False`` keeps the refine 100% JVM-native: type pairs not
-    covered natively evaluate to false — exactly the reference's behavior
-    for unhandled pairs (spatial_index.rs:89-137 returns false silently).
-    Spark evaluates a Python UDF for every input row of its stage even
-    under a `when` branch, so disabling it matters for all-point/polygon
-    workloads."""
+    With ``udf_refine=True`` it is the Arrow refine kernel alone
+    (udfs.join_refine): the kernel does the whole per-pair dispatch —
+    rectangle interval test, boundary-exclusive point-in-polygon, point
+    equality, exact general predicate. Catalyst fast paths next to it
+    would be dead weight: Spark evaluates a Python UDF for every input
+    row of its stage even under a `when` branch, so the kernel already
+    answers every pair.
+
+    ``udf_refine=False`` keeps the refine 100% JVM-native: point/
+    polygon pairs ray-cast in Catalyst, point/point pairs compare
+    coordinates, and every other pair evaluates to false — exactly the
+    reference's behavior for unhandled pairs (spatial_index.rs:89-137
+    returns false silently)."""
     return _memo_col(("refine", lg, rg, predicate, bool(udf_refine)),
                      lambda: _refine_predicate_build(lg, rg, predicate,
                                                      udf_refine))
@@ -209,25 +221,21 @@ def _refine_predicate_build(lg, rg, predicate, udf_refine):
         from .functions import udfs as _udfs
         kern = getattr(_udfs, predicate)
         return F.coalesce(kern(lcol, rcol), F.lit(False))
+    if udf_refine:
+        return F.coalesce(_join_refine_udf(lcol, rcol, predicate),
+                          F.lit(False))
     point_l = lcol["gt"] == 0
     point_r = rcol["gt"] == 0
-    poly_l = lcol["gt"].isin(3, 6)
-    poly_r = rcol["gt"].isin(3, 6)
-    pip_lr = native.contains_point(rcol, native.x(lcol), native.y(lcol))
-    pip_rl = native.contains_point(lcol, native.x(rcol), native.y(rcol))
-    pp_eq = ((native.x(lcol) == native.x(rcol))
-             & (native.y(lcol) == native.y(rcol)))
-    if udf_refine:
-        if predicate == "intersects":
-            general = _intersects_udf(lcol, rcol)
-        else:
-            general = _contains_udf(lcol, rcol)
-    else:
-        general = F.lit(False)
-    return (F.when(point_l & poly_r, pip_lr)
-             .when(point_r & poly_l, pip_rl)
-             .when(point_l & point_r, pp_eq)
-             .otherwise(general))
+    return (F.when(point_l & rcol["gt"].isin(3, 6),
+                   native.contains_point(rcol, native.x(lcol),
+                                         native.y(lcol)))
+             .when(point_r & lcol["gt"].isin(3, 6),
+                   native.contains_point(lcol, native.x(rcol),
+                                         native.y(rcol)))
+             .when(point_l & point_r,
+                   (native.x(lcol) == native.x(rcol))
+                   & (native.y(lcol) == native.y(rcol)))
+             .otherwise(F.lit(False)))
 
 
 def spatial_join(left, right, how="inner", predicate="intersects",
@@ -254,34 +262,33 @@ def spatial_join(left, right, how="inner", predicate="intersects",
     GeoDataFrame — call ``result.release()`` (arctic_spark.cache) when
     the output has been materialized.
 
-    ``convex_refine`` (r13, VERDICT r12 #1): how convex×convex
-    candidate pairs refine.
+    ``convex_refine``: how convex×convex candidate pairs refine.
 
-    * ``"sat"`` — the r6 separating-axis Catalyst expressions.
-      Zero-Python, but lambda-HOF trees evaluate OUTSIDE codegen:
-      measured 0.2 ms/pair (the engine's single largest per-task
-      cost, 349 core-s on the sf0.1 diamond gate).
-    * ``"kernel"`` — the vectorized Arrow batch kernel
-      (geom/batch.py), exact for every type pair. Stress A/B over
-      the identical 12.2M-pair candidate set: SAT 76.6 s vs kernel
-      13.9 s (**5.5×**), equal match counts
-      (scripts/stress_refine_ab.py). The pandas-UDF stage ships
-      EVERY candidate row of the stage through Arrow (Spark hoists
-      Python UDFs out of ``when`` branches), so this mode is for
-      workloads whose pairs actually are convex polygons — tile/
-      rect workloads keep "sat" (their pairs take the pure-codegen
-      interval branch, and the kernel stage would tax them with
-      boundary traffic for nothing).
-    * ``"auto"`` (default) — ``"kernel"`` when ``udf_refine=True``
-      (the general kernel already evaluates on every row of the
-      stage there, so the interpreted SAT branch was computing
-      answers the kernel had already produced — dropping it is
-      strictly less work, no new Python node); ``"sat"`` when
-      ``udf_refine=False`` (preserves the documented 100%-JVM plan).
+    * ``"kernel"`` — the vectorized Arrow batch kernel (geom/batch.py),
+      and then the kernel is the whole refine: one ``join_refine`` UDF
+      does the rect/point/polygon dispatch too, so the join metadata
+      carries only bounds and cells and the plan has no Catalyst HOF
+      refine. Under ``udf_refine=False`` only convex×convex pairs reach
+      the exact kernel; every other pair outside the rect/point fast
+      paths is false. Stress A/B over the identical 12.2M-pair candidate
+      set: SAT 76.6 s vs kernel 13.9 s (**5.5×**), equal match counts
+      (scripts/stress_refine_ab.py).
+    * ``"sat"`` — the r6 separating-axis Catalyst expressions on hoisted
+      rect/convex flags. Zero Python, but lambda-HOF trees evaluate
+      OUTSIDE codegen: measured 0.2 ms/pair. Tile/rect workloads keep
+      it under ``udf_refine=False``: their pairs take the pure-codegen
+      interval branch, and a kernel stage would tax them with boundary
+      traffic for nothing.
+    * ``"auto"`` (default) — ``"kernel"`` when ``udf_refine=True`` (a
+      Python UDF evaluates on every row of its stage anyway, since Spark
+      hoists it out of ``when``); ``"sat"`` when ``udf_refine=False``
+      (keeps the documented 100%-JVM plan).
 
     On exact-touch (boundary-tie) pairs the SAT and kernel paths can
     round differently in floating point — both are exact in real
-    arithmetic; fixtures/gates are constructed tie-free.
+    arithmetic; fixtures/gates are constructed tie-free. The kernel
+    reproduces the Catalyst rect, ray-cast and point-equality formulas
+    term for term, so those pairs decide identically in every mode.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"join type {how!r} not supported (reference "
@@ -320,6 +327,17 @@ def spatial_join(left, right, how="inner", predicate="intersects",
         if points_left:
             raise ValueError(f"points_left fast path does not apply to "
                              f"predicate {predicate!r}")
+
+    if convex_refine not in ("auto", "sat", "kernel"):
+        raise ValueError(f"convex_refine {convex_refine!r} not "
+                         "supported; use 'auto', 'sat' or 'kernel'")
+    # when the Arrow kernel refines convex pairs it is the whole refine;
+    # otherwise the pure-JVM refine reads rect/convex shape flags from
+    # the join metadata
+    cvx_kernel = (convex_refine == "kernel"
+                  or (convex_refine == "auto" and udf_refine))
+    fast_paths = predicate in ("intersects", "contains")
+    sat_flags = fast_paths and not cvx_kernel
 
     lgdf = left if isinstance(left, GeoDataFrame) else GeoDataFrame(left)
     rgdf = right if isinstance(right, GeoDataFrame) else GeoDataFrame(right)
@@ -377,8 +395,9 @@ def spatial_join(left, right, how="inner", predicate="intersects",
                       F.floor(F.col("__l_px") / csl).cast("int").alias("cx"),
                       F.floor(F.col("__l_py") / csl).cast("int").alias("cy"))))
     else:
-        lc = _with_cells(ldfs, lg, cell_size, "__l_", flags=True)
-    rc = _with_cells(rdfs, rg, cell_size, "__r_", flags=True)
+        lc = _with_cells(ldfs, lg, cell_size, "__l_", flags=sat_flags)
+    rc = _with_cells(rdfs, rg, cell_size, "__r_",
+                     flags=sat_flags or points_left)
     if broadcast_right:
         rc = F.broadcast(rc)
 
@@ -428,55 +447,36 @@ def spatial_join(left, right, how="inner", predicate="intersects",
         refine = _memo_col(("pip", lg, rg, predicate, bool(udf_refine)),
                            _build_pip_refine)
     else:
-        # axis-rect × axis-rect pairs are pure interval algebra on the
-        # hoisted bbox fields — for 'intersects' the bbox_ok filter
-        # already IS the exact closed-interval test; for 'contains' it's
-        # interval containment (boundary-inclusive, matching the
-        # engine's documented covers-style contains). Zero geometry work,
-        # zero Python for rectangle workloads (tiles, extents, bboxes) —
-        # combined with udf_refine=False the whole refine stays inside
-        # whole-stage codegen.
-        if convex_refine not in ("auto", "sat", "kernel"):
-            raise ValueError(f"convex_refine {convex_refine!r} not "
-                             "supported; use 'auto', 'sat' or 'kernel'")
-        cvx_kernel = (convex_refine == "kernel"
-                      or (convex_refine == "auto" and udf_refine))
-
         def _build_poly_refine():
-            fast_paths = predicate in ("intersects", "contains")
-            both_rect = F.col("__l_meta.rect") & F.col("__r_meta.rect") \
-                if fast_paths else F.lit(False)
+            if cvx_kernel and not udf_refine:
+                # only convex × convex pairs reach the exact kernel;
+                # rectangle and point pairs keep their fast-path answers
+                # and every other pair is False (batch.join_refine)
+                return F.coalesce(
+                    _join_refine_udf(F.col(lg), F.col(rg), predicate,
+                                     general=False), F.lit(False))
+            if cvx_kernel or not fast_paths:
+                return _refine_predicate(lg, rg, predicate, udf_refine)
+            # "sat": the pure-JVM refine. Axis-rect × axis-rect pairs
+            # are interval algebra on the hoisted bbox fields — for
+            # 'intersects' the bbox_ok filter already IS the exact
+            # closed-interval test; for 'contains' it is interval
+            # containment (boundary-inclusive, the engine's covers-style
+            # contains). Convex × convex pairs take the r6 separating-
+            # axis / half-plane expressions (interpreted lambda-HOFs).
+            both_rect = F.col("__l_meta.rect") & F.col("__r_meta.rect")
+            both_cvx = F.col("__l_meta.cvx") & F.col("__r_meta.cvx")
             if predicate == "intersects":
                 rect_ans = F.lit(True)
+                cvx_ans = native.convex_intersects(F.col(lg), F.col(rg))
             else:
                 rect_ans = ((lx0 <= rx0) & (rx1 <= lx1)
                             & (ly0 <= ry0) & (ry1 <= ly1))
-            # convex×convex pairs (hoisted flags): either the r6
-            # native SAT / half-plane expressions (zero Python, but
-            # interpreted lambda-HOFs — 0.2 ms/pair) or the Arrow
-            # batch kernel (5.5× at stress scale; see the
-            # convex_refine docstring). Under udf_refine=True the
-            # general kernel is ALREADY evaluated for every stage row
-            # (Python UDFs hoist out of `when`), so "kernel" there
-            # means simply dropping the redundant SAT branch.
-            both_cvx = F.col("__l_meta.cvx") & F.col("__r_meta.cvx") \
-                if fast_paths else F.lit(False)
-            general = _refine_predicate(lg, rg, predicate, udf_refine)
-            if cvx_kernel and udf_refine:
-                return (F.when(both_rect, rect_ans).otherwise(general))
-            if cvx_kernel:
-                from .functions import udfs as _udfs
-                kern = _udfs.intersects if predicate == "intersects" \
-                    else _udfs.contains
-                cvx_ans = F.coalesce(kern(F.col(lg), F.col(rg)),
-                                     F.lit(False))
-            elif predicate == "intersects":
-                cvx_ans = native.convex_intersects(F.col(lg), F.col(rg))
-            else:
                 cvx_ans = native.convex_contains(F.col(lg), F.col(rg))
             return (F.when(both_rect, rect_ans)
                     .when(both_cvx, cvx_ans)
-                    .otherwise(general))
+                    .otherwise(_refine_predicate(lg, rg, predicate,
+                                                 udf_refine)))
         refine = _memo_col(("poly", lg, rg, predicate, bool(udf_refine),
                             bool(cvx_kernel)),
                            _build_poly_refine)

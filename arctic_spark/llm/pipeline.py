@@ -767,14 +767,17 @@ def dsir_select(raw_df: DataFrame, target_df: DataFrame, k: int,
     seed, so an oracle replays the exact selected set; ranking
     quantizes the key to 9 decimals with an id tie-break so a
     cross-engine log() ulp cannot reorder the cut. Returns (id,
-    n_feat, logw, key), the selected k."""
+    n_feat, logw, key), the selected k, with the persisted per-count
+    table pinned on it: ``cache.release(result)`` frees it."""
     w = dsir_log_weights(raw_df, target_df, id_col, text_col, buckets)
     h = F.conv(F.substring(
         F.md5(F.concat(F.col("id").cast("string"), F.lit(seed))),
         1, 8), 16, 10).cast("double")
     u = (h + F.lit(0.5)) / F.lit(4294967296.0)
     key = F.col("logw") + (-F.log(-F.log(u)))
-    return (w.withColumn("key", key)
-            .orderBy(F.round(F.col("key"), 9).desc(),
-                     F.col("id").asc())
-            .limit(int(k)))
+    from ..cache import pin, pinned
+    out = (w.withColumn("key", key)
+           .orderBy(F.round(F.col("key"), 9).desc(),
+                    F.col("id").asc())
+           .limit(int(k)))
+    return pin(out, *pinned(w))

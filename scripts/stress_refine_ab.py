@@ -1,25 +1,36 @@
-"""Stress-scale A/B: interpreted-HOF convex-SAT refine vs the
-Arrow-batched general kernel (r13, VERDICT r12 #1).
+"""Stress-scale A/B of the spatial join's refine expressions over one
+persisted candidate-pair set (>=10M pairs by default), same session
+(STRESS protocol).
 
-geo_diamond_join's refine — `native.convex_intersects`, a lambda-HOF
-Catalyst expression Spark evaluates OUTSIDE codegen — was measured at
-349 core-s at sf0.1, the engine's worst per-task cost. The r12 Arrow
-rejection (pairwise cosine) was measured at sf0.1 pair counts only;
-this script settles the 100 TB question by timing BOTH refines over
-the IDENTICAL persisted candidate-pair set at >=10M pairs,
-same-session (STRESS protocol):
+Arms A/B (r13, VERDICT r12 #1): interpreted-HOF convex-SAT refine vs
+the Arrow-batched general kernel. geo_diamond_join's refine —
+`native.convex_intersects`, a lambda-HOF Catalyst expression Spark
+evaluates OUTSIDE codegen — was measured at 349 core-s at sf0.1, the
+engine's worst per-task cost.
 
   A. native SAT:   where(convex_intersects(lg, rg))       [pure JVM]
   B. Arrow kernel: where(udfs.intersects(lg, rg))         [geom/batch]
 
-Both run over the same cached candidates, counts must agree exactly
-(both are exact for convex polygons), and each side runs twice with
-the min reported (warm cache).
+Arm C: the join's former default refine — a Catalyst `when` chain
+(rectangle flags, ray cast, point equality) around the general kernel
+UDF — against the one-kernel refine that replaced it (udfs.join_refine,
+whose numpy dispatch does the same per-pair routing). Both ship every
+candidate row through Arrow; C shows whether the numpy dispatch adds
+per-row cost.
+
+  C. when_chain_udf: when(rect & rect, ...).when(point/polygon, ray
+                     cast)...otherwise(udfs.intersects(lg, rg))
+     join_refine:    where(coalesce(udfs.join_refine(lg, rg), false))
+
+Every side runs over the same cached candidates, counts must agree
+exactly (all are exact for these tie-free convex polygons), and each
+side runs ``passes`` times with the min reported (warm cache).
 
 Usage: python scripts/stress_refine_ab.py [n_left] [n_right] [passes]
-                                          [predicate]
+                                          [predicate] [arms]
 predicate 'contains' A/Bs convex_contains (half-plane HOF) against
-the batch contains kernel instead. Run with SPARK_DRIVER_MEMORY=48g
+the batch contains kernel instead. ``arms`` picks the comparisons,
+any of "AB" and "C" (default "ABC"). Run with SPARK_DRIVER_MEMORY=48g
 for the 10M-pair default.
 """
 
@@ -61,11 +72,40 @@ def _diamonds(spark, n, key, domain, r_base=1.37, r_step=0.6,
         .alias("geometry")))
 
 
+def _when_chain_refine(lg, rg, predicate, kern):
+    """The spatial join's default refine expression before it became
+    one kernel: rectangle × rectangle from the hoisted flags, then the
+    Catalyst ray cast for point/polygon pairs, point equality, and the
+    general kernel UDF for every other pair (Spark still evaluates the
+    UDF on every row: Python UDFs hoist out of `when`)."""
+    if predicate == "intersects":
+        rect_ans = F.lit(True)
+    else:
+        lx0, ly0, lx1, ly1 = native.bounds(lg)
+        rx0, ry0, rx1, ry1 = native.bounds(rg)
+        rect_ans = ((lx0 <= rx0) & (rx1 <= lx1)
+                    & (ly0 <= ry0) & (ry1 <= ly1))
+    point_l, point_r = lg["gt"] == 0, rg["gt"] == 0
+    return (F.when(F.col("lrect") & F.col("rrect"), rect_ans)
+            .otherwise(
+                F.when(point_l & rg["gt"].isin(3, 6),
+                       native.contains_point(rg, native.x(lg),
+                                             native.y(lg)))
+                .when(point_r & lg["gt"].isin(3, 6),
+                      native.contains_point(lg, native.x(rg),
+                                            native.y(rg)))
+                .when(point_l & point_r,
+                      (native.x(lg) == native.x(rg))
+                      & (native.y(lg) == native.y(rg)))
+                .otherwise(kern(lg, rg))))
+
+
 def main():
     n_left = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
     n_right = int(sys.argv[2]) if len(sys.argv) > 2 else 400_000
     passes = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     predicate = sys.argv[4] if len(sys.argv) > 4 else "intersects"
+    arms = sys.argv[5].upper() if len(sys.argv) > 5 else "ABC"
     spark = get_spark("arctic_spark-stress-refine-ab")
     sc = spark.sparkContext
     try:
@@ -87,13 +127,19 @@ def main():
                        r_base=l_base, r_step=0.6013)
         d2 = _diamonds(spark, n_right, "rid", domain, mult=69069,
                        r_base=1.4431, r_step=0.5711)
+        # per-geometry rectangle flags for arm C's `when` chain (the
+        # former join metadata), computed once per side
         lc = _with_cells(
             d1.df.select(F.col("lid"),
-                         F.col("geometry").alias("geometry_left")),
+                         F.col("geometry").alias("geometry_left"),
+                         native.is_axis_rect(F.col("geometry"))
+                         .alias("lrect")),
             "geometry_left", cell, "__l_", flags=False)
         rc = _with_cells(
             d2.df.select(F.col("rid"),
-                         F.col("geometry").alias("geometry_right")),
+                         F.col("geometry").alias("geometry_right"),
+                         native.is_axis_rect(F.col("geometry"))
+                         .alias("rrect")),
             "geometry_right", cell, "__r_", flags=False)
         joined = lc.join(rc, (lc["__l_cell.cx"] == rc["__r_cell.cx"])
                          & (lc["__l_cell.cy"] == rc["__r_cell.cy"]),
@@ -112,7 +158,7 @@ def main():
                         == F.col("__l_cell.cy")))
         cand = (joined.where(bbox_ok & canonical)
                 .select("lid", "rid", "geometry_left",
-                        "geometry_right")
+                        "geometry_right", "lrect", "rrect")
                 .persist(StorageLevel.MEMORY_AND_DISK))
         sc.setJobDescription("stress-refine: materialize candidates")
         n_cand = cand.count()
@@ -124,19 +170,19 @@ def main():
             # contains needs the left radii strictly larger so a
             # meaningful fraction of pairs actually contain; the
             # tie-free radii property still holds
-            sides = {
-                "sat_hof": cand.where(
-                    native.convex_contains(lg, rg)),
-                "arrow_kernel": cand.where(
-                    F.coalesce(udfs.contains(lg, rg), F.lit(False))),
-            }
+            sat, kern = native.convex_contains, udfs.contains
         else:
-            sides = {
-                "sat_hof": cand.where(
-                    native.convex_intersects(lg, rg)),
-                "arrow_kernel": cand.where(
-                    F.coalesce(udfs.intersects(lg, rg), F.lit(False))),
-            }
+            sat, kern = native.convex_intersects, udfs.intersects
+        sides = {}
+        if "A" in arms or "B" in arms:
+            sides["sat_hof"] = cand.where(sat(lg, rg))
+            sides["arrow_kernel"] = cand.where(
+                F.coalesce(kern(lg, rg), F.lit(False)))
+        if "C" in arms:
+            sides["when_chain_udf"] = cand.where(
+                _when_chain_refine(lg, rg, predicate, kern))
+            sides["join_refine"] = cand.where(F.coalesce(
+                udfs.join_refine(lg, rg, predicate), F.lit(False)))
         results = {}
         for name, df in sides.items():
             times = []
@@ -151,10 +197,15 @@ def main():
                   f"min {min(times):.1f}s of {['%.1f' % t for t in times]} "
                   f"({n_cand / min(times) / 1e6:.2f}M pairs/s)",
                   flush=True)
-        a, b = results["sat_hof"], results["arrow_kernel"]
-        assert a[0] == b[0], f"refine mismatch: {a[0]} vs {b[0]}"
-        print(f"match counts EXACTLY EQUAL ({a[0]:,}); "
-              f"arrow/sat speedup: {a[1] / b[1]:.2f}x", flush=True)
+        for a_name, b_name in (("sat_hof", "arrow_kernel"),
+                               ("when_chain_udf", "join_refine")):
+            if a_name not in results:
+                continue
+            a, b = results[a_name], results[b_name]
+            assert a[0] == b[0], f"refine mismatch: {a[0]} vs {b[0]}"
+            print(f"match counts EXACTLY EQUAL ({a[0]:,}); "
+                  f"{b_name}/{a_name} speedup: {a[1] / b[1]:.2f}x",
+                  flush=True)
     finally:
         spark.stop()
 

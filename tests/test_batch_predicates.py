@@ -145,3 +145,48 @@ def test_empty_operand_semantics():
             assert scalar_fn(r1.geom(i), r2.geom(i)) is False, \
                 (name, lhs[i], rhs[i])
             assert not bool(got[i]), (name, lhs[i], rhs[i])
+
+
+def test_int32_offsets_overflow_is_loud():
+    """GEOM list offsets past int32 raise, naming the field, instead of
+    wrapping into a corrupt Arrow array."""
+    from arctic_spark.errors import ComputeError
+    from arctic_spark.functions.udfs import int32_offsets
+    ok = np.array([0, 3, 2 ** 31 - 1], dtype=np.int64)
+    assert int32_offsets(ok, "xs").tolist() == ok.tolist()
+    assert int32_offsets(np.zeros(1, np.int64), "xs").dtype == np.int32
+    bad = np.array([0, 5, 2 ** 31], dtype=np.int64)
+    with pytest.raises(ComputeError, match="'rings'"):
+        int32_offsets(bad, "rings")
+
+
+def test_join_refine_dispatch():
+    """Per-pair dispatch of the join refine kernel on hand-checked
+    boundary cases."""
+    sq = "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"
+    dia = "POLYGON ((1 0, 2 1, 1 2, 0 1, 1 0))"
+    holed = ("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), "
+             "(1 1, 1 3, 3 3, 3 1, 1 1))")
+    cases = [  # (a, b, intersects, contains)
+        (sq, "POLYGON ((2 0, 3 0, 3 2, 2 2, 2 0))", True, False),
+        (sq, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))", True, True),
+        ("POINT (1 1)", sq, True, True),      # interior point
+        ("POINT (0 1)", sq, False, False),    # boundary excluded
+        (dia, "POINT (1 1)", True, True),
+        (dia, "POINT (0.5 0.5)", False, False),  # on an edge
+        (holed, "POINT (2 2)", False, False),    # in the hole
+        (holed, "POINT (0.5 2)", True, True),
+        ("POINT (3 3)", "POINT (3 3)", True, True),
+        ("LINESTRING (0 0, 5 5)", sq, True, False),
+        (dia, sq, True, False),
+    ]
+    r1 = wkt.parse([c[0] for c in cases])
+    r2 = wkt.parse([c[1] for c in cases])
+    got_i = batch.join_refine(r1, r2, "intersects")
+    got_c = batch.join_refine(r1, r2, "contains")
+    for i, c in enumerate(cases):
+        assert (bool(got_i[i]), bool(got_c[i])) == (c[2], c[3]), c
+    # without the general kernel only convex x convex pairs reach it
+    lim = batch.join_refine(r1, r2, "intersects", general=False)
+    assert bool(lim[9]) is False and bool(lim[10]) is True
+    assert lim[:9].tolist() == got_i[:9].tolist()

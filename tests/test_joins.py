@@ -502,3 +502,150 @@ def test_dwithin_points_fast_path_matches_general(spark, points_df):
     # the right side
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
+
+
+def _mixed_rows():
+    """120 geometries on small integer coordinates, so boundary ties are
+    common: points on edges and vertices, rectangles sharing edges,
+    diamonds, holed polygons, multipolygons, lines, L-shapes, nulls and
+    empties."""
+    import random
+    rnd = random.Random(11)
+
+    def ring(pts):
+        pts = list(pts) + [pts[0]]
+        return "(" + ", ".join(f"{x} {y}" for x, y in pts) + ")"
+
+    def rect(x0, y0, w, h):
+        return [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)]
+
+    def ri(a, b):
+        return rnd.randint(a, b)
+
+    kinds = ["point", "point", "rect", "diamond", "holed", "multi", "line",
+             "ell", "point", "rect", "tri", "edge_point"]
+    rows = []
+    for i in range(120):
+        k = kinds[i % len(kinds)]
+        if k == "point":
+            wkt = f"POINT ({ri(0, 10)} {ri(0, 10)})"
+        elif k == "edge_point":
+            # half-integer on a grid line: on rectangle edges, off vertices
+            wkt = f"POINT ({ri(0, 10)} {ri(0, 9)}.5)"
+        elif k == "rect":
+            box = rect(ri(0, 8), ri(0, 8), ri(1, 3), ri(1, 3))
+            wkt = f"POLYGON ({ring(box)})"
+        elif k == "diamond":
+            cx, cy, r = ri(1, 9), ri(1, 9), ri(1, 2)
+            dia = [(cx - r, cy), (cx, cy - r), (cx + r, cy), (cx, cy + r)]
+            wkt = f"POLYGON ({ring(dia)})"
+        elif k == "holed":
+            x0, y0 = ri(0, 5), ri(0, 5)
+            wkt = (f"POLYGON ({ring(rect(x0, y0, 4, 4))}, "
+                   f"{ring(rect(x0 + 1, y0 + 1, 2, 2)[::-1])})")
+        elif k == "multi":
+            x0, y0 = ri(0, 7), ri(0, 7)
+            wkt = (f"MULTIPOLYGON (({ring(rect(x0, y0, 1, 2))}), "
+                   f"({ring(rect(x0 + 2, y0, 2, 1))}))")
+        elif k == "line":
+            wkt = (f"LINESTRING ({ri(0, 10)} {ri(0, 10)}, "
+                   f"{ri(0, 10)} {ri(0, 10)}, {ri(0, 10)} {ri(0, 10)})")
+        elif k == "ell":
+            x0, y0 = ri(0, 6), ri(0, 6)
+            ell = [(x0, y0), (x0 + 4, y0), (x0 + 4, y0 + 1),
+                   (x0 + 1, y0 + 1), (x0 + 1, y0 + 3), (x0, y0 + 3)]
+            wkt = f"POLYGON ({ring(ell)})"
+        else:
+            x0, y0 = ri(0, 7), ri(0, 7)
+            wkt = f"POLYGON ({ring([(x0, y0), (x0 + 3, y0), (x0, y0 + 3)])})"
+        if i % 29 == 5:
+            wkt = None
+        elif i % 31 == 7:
+            wkt = "POLYGON EMPTY"
+        elif i % 37 == 9:
+            wkt = "POINT EMPTY"
+        rows.append((i, wkt))
+    return rows
+
+
+@pytest.fixture(scope="module")
+def mixed_df(spark, tmp_path_factory):
+    df = spark.createDataFrame(_mixed_rows(), "id long, wkt string") \
+        .select("id", st.from_wkt("wkt").alias("geometry"))
+    path = str(tmp_path_factory.mktemp("sj") / "mixed.parquet")
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _when_chain_pairs(df, predicate, general):
+    """Pairs of the refine as the join planned it before the refine
+    became one Arrow kernel: rect/convex shape flags, the Catalyst
+    boundary-exclusive ray cast and point equality in a `when` chain,
+    the exact kernel as the fallback (all pairs with ``general``, else
+    convex × convex pairs only), over every bbox-overlapping pair."""
+    from arctic_spark.functions import native, udfs
+    a = df.select(F.col("id").alias("ia"), F.col("geometry").alias("ga"))
+    b = df.select(F.col("id").alias("ib"), F.col("geometry").alias("gb"))
+    ga, gb = F.col("ga"), F.col("gb")
+    ax0, ay0, ax1, ay1 = native.bounds(ga)
+    bx0, by0, bx1, by1 = native.bounds(gb)
+    kern = udfs.intersects if predicate == "intersects" else udfs.contains
+    cand = (a.crossJoin(b)
+            .where((ax0 <= bx1) & (bx0 <= ax1) & (ay0 <= by1) & (by0 <= ay1))
+            .withColumn("k", kern(ga, gb)))
+    both_rect = native.is_axis_rect(ga) & native.is_axis_rect(gb)
+    rect_ans = F.lit(True) if predicate == "intersects" else (
+        (ax0 <= bx0) & (bx1 <= ax1) & (ay0 <= by0) & (by1 <= ay1))
+    point_a, point_b = ga["gt"] == 0, gb["gt"] == 0
+    chain = (F.when(point_a & gb["gt"].isin(3, 6),
+                    native.contains_point(gb, native.x(ga), native.y(ga)))
+             .when(point_b & ga["gt"].isin(3, 6),
+                   native.contains_point(ga, native.x(gb), native.y(gb)))
+             .when(point_a & point_b, (native.x(ga) == native.x(gb))
+                   & (native.y(ga) == native.y(gb))))
+    if general:
+        ref = F.when(both_rect, rect_ans).otherwise(
+            chain.otherwise(F.col("k")))
+    else:
+        ref = (F.when(both_rect, rect_ans)
+               .when(native.is_convex(ga) & native.is_convex(gb),
+                     F.coalesce(F.col("k"), F.lit(False)))
+               .otherwise(chain.otherwise(F.lit(False))))
+    return sorted((r.ia, r.ib) for r in cand.where(ref).collect())
+
+
+@pytest.mark.parametrize("predicate", ["intersects", "contains"])
+@pytest.mark.parametrize("udf_refine,convex_refine",
+                         [(True, "auto"), (False, "kernel")])
+def test_kernel_refine_matches_when_chain(mixed_df, predicate, udf_refine,
+                                          convex_refine):
+    """The one-kernel refine returns exactly the pairs of the `when`
+    chain it replaced, ties included, in both modes that run it."""
+    out = spatial_join(mixed_df, mixed_df, predicate=predicate,
+                       udf_refine=udf_refine, convex_refine=convex_refine,
+                       cell_size=3.0)
+    got = sorted((r.id_left, r.id_right) for r in out.df.collect())
+    want = _when_chain_pairs(mixed_df, predicate, general=udf_refine)
+    assert len(want) > 100
+    assert got == want
+
+
+def test_kernel_refine_plan_shape(mixed_df):
+    """The default polygon join plans one Python node, a refine Filter
+    without lambda HOFs, and join metadata of bounds and cells only;
+    the pure-JVM sat mode still plans no Python node (and keeps its
+    shape flags)."""
+    out = spatial_join(mixed_df, mixed_df, cell_size=3.0).df
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert "BatchEvalPython" not in plan
+    refine = [ln for ln in plan.splitlines()
+              if "Filter " in ln and "pythonUDF" in ln]
+    assert len(refine) == 1
+    assert "lambdafunction" not in refine[0]
+    assert ", rect, " not in plan and ", cvx, " not in plan
+    sat = spatial_join(mixed_df, mixed_df, cell_size=3.0, udf_refine=False,
+                       convex_refine="sat").df
+    plan = sat._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan
+    assert ", rect, " in plan and ", cvx, " in plan

@@ -398,6 +398,25 @@ def test_dsir_select_deterministic_and_weighted(spark):
     assert sel3 != sel1 or True  # different seed may differ; no crash
 
 
+def test_dsir_select_release_frees_cache(spark):
+    """dsir_select pins the per-count table dsir_log_weights persists,
+    so release() on the selection leaves nothing cached."""
+    from arctic_spark.cache import pinned, release
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    raw = spark.createDataFrame(
+        [(i, "alpha beta" if i % 2 else "yankee zulu") for i in range(20)],
+        "doc_id long, text string")
+    target = spark.createDataFrame([(9, "alpha beta alpha")],
+                                   "doc_id long, text string")
+    sel = pipeline.dsir_select(raw, target, k=5, buckets=32)
+    assert len(sel.collect()) == 5
+    assert len(pinned(sel)) == 1
+    assert jsc.getPersistentRDDs().size() == 1
+    assert release(sel) == 1
+    assert jsc.getPersistentRDDs().size() == 0
+
+
 def test_dsir_empty_docs_excluded(spark):
     raw = spark.createDataFrame(
         [(1, "alpha beta"), (2, ""), (3, "   ")],
