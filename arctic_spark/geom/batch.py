@@ -558,22 +558,45 @@ def overlaps(r1: RaggedGeometry, r2: RaggedGeometry) -> np.ndarray:
 # (functions/native.py: is_axis_rect, is_convex, contains_point)
 # ---------------------------------------------------------------------------
 
-def _take(rg: RaggedGeometry, idx: np.ndarray) -> RaggedGeometry:
-    """Rows ``idx`` of a batch as a new batch."""
-    idx = np.asarray(idx, dtype=np.int64)
+# Catalyst orders doubles with NaN above every number and NaN = NaN
+# (SQLOrderingUtil.compareDoubles); array_min/least skip NaN unless
+# every value is NaN, array_max/greatest return NaN if any value is
+# (np.fmin / np.maximum). The twins below compare the same way.
 
-    def gather(vals, off):
-        lens = off[idx + 1] - off[idx]
-        new = np.zeros(idx.size + 1, np.int64)
-        np.cumsum(lens, out=new[1:])
-        src = np.repeat(off[idx] - new[:-1], lens) + np.arange(new[-1])
-        return vals[src], new
+def _le(a, b):
+    return (a <= b) | np.isnan(b)
 
-    xs, co = gather(rg.xs, rg.coord_offsets)
-    ys, _ = gather(rg.ys, rg.coord_offsets)
-    rings, ro = gather(rg.rings, rg.ring_offsets)
-    parts, po = gather(rg.parts, rg.part_offsets)
-    return RaggedGeometry(rg.gt[idx], xs, ys, co, rings, ro, parts, po)
+
+def _ge(a, b):
+    return (a >= b) | np.isnan(a)
+
+
+def _lt(a, b):
+    return ~_ge(a, b)
+
+
+def _gt(a, b):
+    return ~_le(a, b)
+
+
+def _eq(a, b):
+    return (a == b) | (np.isnan(a) & np.isnan(b))
+
+
+def _catalyst_bounds(rg: RaggedGeometry):
+    """native.bounds per geometry — array_min / array_max with
+    Catalyst's NaN ordering. Rows without coordinates read NaN, which
+    compares unlike native.bounds' null: callers mask them."""
+    n = len(rg)
+    out = [np.full(n, np.nan) for _ in range(4)]
+    ne = np.diff(rg.coord_offsets) > 0
+    if ne.any():
+        starts = rg.coord_offsets[:-1][ne]
+        out[0][ne] = np.fmin.reduceat(rg.xs, starts)
+        out[1][ne] = np.fmin.reduceat(rg.ys, starts)
+        out[2][ne] = np.maximum.reduceat(rg.xs, starts)
+        out[3][ne] = np.maximum.reduceat(rg.ys, starts)
+    return out
 
 
 def _rect_shape(rg: RaggedGeometry) -> np.ndarray:
@@ -587,13 +610,14 @@ def _rect_shape(rg: RaggedGeometry) -> np.ndarray:
     if idx.size:
         c = rg.coord_offsets[:-1][idx, None] + np.arange(5)
         x, y = rg.xs[c], rg.ys[c]
-        corners = (((x == x.min(1, keepdims=True))
-                    | (x == x.max(1, keepdims=True))).all(1)
-                   & ((y == y.min(1, keepdims=True))
-                      | (y == y.max(1, keepdims=True))).all(1))
-        rectilinear = ((x[:, :4] == x[:, 1:])
-                       != (y[:, :4] == y[:, 1:])).all(1)
-        out[idx] = corners & rectilinear
+        # the edge test first: it rejects most other shapes cheaply
+        keep = (_eq(x[:, :4], x[:, 1:]) != _eq(y[:, :4], y[:, 1:])).all(1)
+        x, y = x[keep], y[keep]
+        out[idx[keep]] = (
+            (_eq(x, np.fmin.reduce(x, 1, keepdims=True))
+             | _eq(x, x.max(1, keepdims=True))).all(1)
+            & (_eq(y, np.fmin.reduce(y, 1, keepdims=True))
+               | _eq(y, y.max(1, keepdims=True))).all(1))
     return out
 
 
@@ -606,7 +630,8 @@ def is_convex(rg: RaggedGeometry) -> np.ndarray:
     """Vector twin of native.is_convex: a one-ring polygon of >= 4
     vertices whose consecutive-edge cross products (with wraparound)
     all share one sign, zeros allowed. Same products in the same order
-    (``ex_i * ey_i+1 - ey_i * ex_i+1``), so ties decide identically."""
+    (``ex_i * ey_i+1 - ey_i * ex_i+1``) and Catalyst's NaN ordering, so
+    ties and NaN turns decide identically."""
     n = len(rg)
     co = rg.coord_offsets
     cand = ((rg.gt == POLYGON) & (np.diff(rg.ring_offsets) == 1)
@@ -623,9 +648,8 @@ def is_convex(rg: RaggedGeometry) -> np.ndarray:
     ex, ey = rg.xs[pos + 1] - rg.xs[pos], rg.ys[pos + 1] - rg.ys[pos]
     nx, ny = rg.xs[nxt + 1] - rg.xs[nxt], rg.ys[nxt + 1] - rg.ys[nxt]
     t = ex * ny - ey * nx
-    # NaN turns fail both "all >= 0" and "all <= 0", as in Catalyst
-    not_all_ge = np.bincount(g, weights=~(t >= 0), minlength=n) > 0
-    not_all_le = np.bincount(g, weights=~(t <= 0), minlength=n) > 0
+    not_all_ge = np.bincount(g, weights=~_ge(t, 0.0), minlength=n) > 0
+    not_all_le = np.bincount(g, weights=~_le(t, 0.0), minlength=n) > 0
     return cand & ~(not_all_ge & not_all_le)
 
 
@@ -636,24 +660,26 @@ def contains_point_strict(poly: RaggedGeometry, px: np.ndarray,
     even-odd ray cast with the parity taken over every ring of the
     geometry, and the interval test for axis rectangles. Crossing and
     on-segment tests use the native expression's float formulas term
-    for term, so boundary ties decide identically."""
+    for term, compared with Catalyst's NaN ordering, so boundary ties
+    and NaN coordinates decide identically."""
     n = len(poly)
     out = np.zeros(n, dtype=bool)
     rect = active & _rect_shape(poly)
     if rect.any():
-        x0, y0, x1, y1 = _bounds_per_geom(poly)
-        out |= rect & (px > x0) & (px < x1) & (py > y0) & (py < y1)
+        x0, y0, x1, y1 = _catalyst_bounds(poly)
+        out |= (rect & _gt(px, x0) & _lt(px, x1)
+                & _gt(py, y0) & _lt(py, y1))
     ray = active & ~rect
     if not ray.any():
         return out
     ax, ay, bx, by, g, _ = _seg_arrays(poly, ray)
     qx, qy = px[g], py[g]
     with np.errstate(divide="ignore", invalid="ignore"):
-        cross = (((ay > qy) != (by > qy))
-                 & (qx < ax + (qy - ay) * (bx - ax) / (by - ay)))
-    on = (((qx - ax) * (by - ay) == (qy - ay) * (bx - ax))
-          & (qx >= np.minimum(ax, bx)) & (qx <= np.maximum(ax, bx))
-          & (qy >= np.minimum(ay, by)) & (qy <= np.maximum(ay, by)))
+        cross = ((_gt(ay, qy) != _gt(by, qy))
+                 & _lt(qx, ax + (qy - ay) * (bx - ax) / (by - ay)))
+    on = (_eq((qx - ax) * (by - ay), (qy - ay) * (bx - ax))
+          & _ge(qx, np.fmin(ax, bx)) & _le(qx, np.maximum(ax, bx))
+          & _ge(qy, np.fmin(ay, by)) & _le(qy, np.maximum(ay, by)))
     odd = np.bincount(g, weights=cross, minlength=n) % 2 == 1
     on_bdy = np.bincount(g, weights=on, minlength=n) > 0
     return out | (ray & odd & ~on_bdy)
@@ -697,12 +723,14 @@ def join_refine(r1: RaggedGeometry, r2: RaggedGeometry, predicate: str,
     todo = (r1.gt != MISSING) & (r2.gt != MISSING)
     rect = todo & is_axis_rect(r1) & is_axis_rect(r2)
     if rect.any():
-        x1n, y1n, x1x, y1x = _bounds_per_geom(r1)
-        x2n, y2n, x2x, y2x = _bounds_per_geom(r2)
+        x1n, y1n, x1x, y1x = _catalyst_bounds(r1)
+        x2n, y2n, x2x, y2x = _catalyst_bounds(r2)
         if predicate == "intersects":
-            ans = (x1n <= x2x) & (x2n <= x1x) & (y1n <= y2x) & (y2n <= y1x)
+            ans = (_le(x1n, x2x) & _le(x2n, x1x)
+                   & _le(y1n, y2x) & _le(y2n, y1x))
         else:
-            ans = (x1n <= x2n) & (x2x <= x1x) & (y1n <= y2n) & (y2x <= y1x)
+            ans = (_le(x1n, x2n) & _le(x2x, x1x)
+                   & _le(y1n, y2n) & _le(y2x, y1x))
         out |= rect & ans
         todo &= ~rect
     pt1, pt2 = r1.gt == POINT, r2.gt == POINT
@@ -717,17 +745,13 @@ def join_refine(r1: RaggedGeometry, r2: RaggedGeometry, predicate: str,
         if m.any():
             out |= contains_point_strict(r1, px2, py2, m & has2)
         m = todo & pt1 & pt2 & has1 & has2
-        out |= m & (px1 == px2) & (py1 == py2)
+        out |= m & _eq(px1, px2) & _eq(py1, py2)
         todo &= ~((pt1 & pg2) | (pt2 & pg1) | (pt1 & pt2))
     if not general:
         todo &= is_convex(r1) & is_convex(r2)
     if todo.any():
         kern = intersects if predicate == "intersects" else contains
-        if todo.all():
-            out |= kern(r1, r2)
-        else:
-            idx = np.flatnonzero(todo)
-            out[idx] = kern(_take(r1, idx), _take(r2, idx))
+        out |= todo & kern(r1, r2)
     return out
 
 

@@ -288,7 +288,9 @@ def spatial_join(left, right, how="inner", predicate="intersects",
     round differently in floating point — both are exact in real
     arithmetic; fixtures/gates are constructed tie-free. The kernel
     reproduces the Catalyst rect, ray-cast and point-equality formulas
-    term for term, so those pairs decide identically in every mode.
+    term for term and compares doubles in Catalyst's order (NaN above
+    every number, NaN = NaN), so those pairs decide identically in
+    every mode, NaN coordinates included.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"join type {how!r} not supported (reference "

@@ -27,10 +27,9 @@ exactly (all are exact for these tie-free convex polygons), and each
 side runs ``passes`` times with the min reported (warm cache).
 
 Usage: python scripts/stress_refine_ab.py [n_left] [n_right] [passes]
-                                          [predicate] [arms]
+                                          [predicate]
 predicate 'contains' A/Bs convex_contains (half-plane HOF) against
-the batch contains kernel instead. ``arms`` picks the comparisons,
-any of "AB" and "C" (default "ABC"). Run with SPARK_DRIVER_MEMORY=48g
+the batch contains kernel instead. Run with SPARK_DRIVER_MEMORY=48g
 for the 10M-pair default.
 """
 
@@ -105,7 +104,6 @@ def main():
     n_right = int(sys.argv[2]) if len(sys.argv) > 2 else 400_000
     passes = int(sys.argv[3]) if len(sys.argv) > 3 else 2
     predicate = sys.argv[4] if len(sys.argv) > 4 else "intersects"
-    arms = sys.argv[5].upper() if len(sys.argv) > 5 else "ABC"
     spark = get_spark("arctic_spark-stress-refine-ab")
     sc = spark.sparkContext
     try:
@@ -173,16 +171,15 @@ def main():
             sat, kern = native.convex_contains, udfs.contains
         else:
             sat, kern = native.convex_intersects, udfs.intersects
-        sides = {}
-        if "A" in arms or "B" in arms:
-            sides["sat_hof"] = cand.where(sat(lg, rg))
-            sides["arrow_kernel"] = cand.where(
-                F.coalesce(kern(lg, rg), F.lit(False)))
-        if "C" in arms:
-            sides["when_chain_udf"] = cand.where(
-                _when_chain_refine(lg, rg, predicate, kern))
-            sides["join_refine"] = cand.where(F.coalesce(
-                udfs.join_refine(lg, rg, predicate), F.lit(False)))
+        sides = {
+            "sat_hof": cand.where(sat(lg, rg)),
+            "arrow_kernel": cand.where(
+                F.coalesce(kern(lg, rg), F.lit(False))),
+            "when_chain_udf": cand.where(
+                _when_chain_refine(lg, rg, predicate, kern)),
+            "join_refine": cand.where(F.coalesce(
+                udfs.join_refine(lg, rg, predicate), F.lit(False))),
+        }
         results = {}
         for name, df in sides.items():
             times = []
@@ -199,8 +196,6 @@ def main():
                   flush=True)
         for a_name, b_name in (("sat_hof", "arrow_kernel"),
                                ("when_chain_udf", "join_refine")):
-            if a_name not in results:
-                continue
             a, b = results[a_name], results[b_name]
             assert a[0] == b[0], f"refine mismatch: {a[0]} vs {b[0]}"
             print(f"match counts EXACTLY EQUAL ({a[0]:,}); "

@@ -577,12 +577,37 @@ def mixed_df(spark, tmp_path_factory):
     return spark.read.parquet(path)
 
 
-def _when_chain_pairs(df, predicate, general):
-    """Pairs of the refine as the join planned it before the refine
-    became one Arrow kernel: rect/convex shape flags, the Catalyst
-    boundary-exclusive ray cast and point equality in a `when` chain,
-    the exact kernel as the fallback (all pairs with ``general``, else
-    convex × convex pairs only), over every bbox-overlapping pair."""
+# NaN coordinates near the origin: an axis rectangle only in Catalyst's
+# NaN order (NaN = NaN, array_max = NaN), a point equal to its twin
+# only there, NaN vertices in a diamond, a square and a line
+_NAN_WKT = ["POINT (NaN NaN)", "POINT (NaN NaN)", "POINT (1 NaN)",
+            "POINT (NaN 1)", "POLYGON ((0 0, NaN 0, NaN 2, 0 2, 0 0))",
+            "POLYGON ((0 0, 2 0, 2 NaN, 0 2, 0 0))",
+            "POLYGON ((1 0, 2 1, 1 NaN, 0 1, 1 0))",
+            "LINESTRING (0 0, NaN NaN, 2 2)"]
+
+
+@pytest.fixture(scope="module")
+def mixed_nan_df(spark, tmp_path_factory):
+    """The mixed fixture plus the NaN rows (ids 1000 + i). from_wkt
+    reads NaN as a null coordinate; the rows get real NaN doubles."""
+    rows = _mixed_rows() + [(1000 + i, w) for i, w in enumerate(_NAN_WKT)]
+    nan = F.lit(float("nan"))
+    g = st.from_wkt("wkt")
+    df = spark.createDataFrame(rows, "id long, wkt string").select(
+        "id", g.alias("geometry"))
+    g = F.col("geometry")
+    df = df.withColumn("geometry", g.withField(
+        "xs", F.transform(g["xs"], lambda v: F.coalesce(v, nan))).withField(
+        "ys", F.transform(g["ys"], lambda v: F.coalesce(v, nan))))
+    path = str(tmp_path_factory.mktemp("sj") / "mixed_nan.parquet")
+    df.write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _bbox_candidates(df, predicate):
+    """Every bbox-overlapping pair (ia, ib, ga, gb) of ``df`` with
+    itself, and the exact kernel's answer ``k`` on it."""
     from arctic_spark.functions import native, udfs
     a = df.select(F.col("id").alias("ia"), F.col("geometry").alias("ga"))
     b = df.select(F.col("id").alias("ib"), F.col("geometry").alias("gb"))
@@ -590,9 +615,21 @@ def _when_chain_pairs(df, predicate, general):
     ax0, ay0, ax1, ay1 = native.bounds(ga)
     bx0, by0, bx1, by1 = native.bounds(gb)
     kern = udfs.intersects if predicate == "intersects" else udfs.contains
-    cand = (a.crossJoin(b)
+    return (a.crossJoin(b)
             .where((ax0 <= bx1) & (bx0 <= ax1) & (ay0 <= by1) & (by0 <= ay1))
             .withColumn("k", kern(ga, gb)))
+
+
+def _when_chain(predicate, general):
+    """The refine as the join planned it before it became one Arrow
+    kernel, over a :func:`_bbox_candidates` frame: rect/convex shape
+    flags, the Catalyst boundary-exclusive ray cast and point equality
+    in a `when` chain, the exact kernel as the fallback (all pairs with
+    ``general``, else convex × convex pairs only)."""
+    from arctic_spark.functions import native
+    ga, gb = F.col("ga"), F.col("gb")
+    ax0, ay0, ax1, ay1 = native.bounds(ga)
+    bx0, by0, bx1, by1 = native.bounds(gb)
     both_rect = native.is_axis_rect(ga) & native.is_axis_rect(gb)
     rect_ans = F.lit(True) if predicate == "intersects" else (
         (ax0 <= bx0) & (bx1 <= ax1) & (ay0 <= by0) & (by1 <= ay1))
@@ -604,14 +641,23 @@ def _when_chain_pairs(df, predicate, general):
              .when(point_a & point_b, (native.x(ga) == native.x(gb))
                    & (native.y(ga) == native.y(gb))))
     if general:
-        ref = F.when(both_rect, rect_ans).otherwise(
+        return F.when(both_rect, rect_ans).otherwise(
             chain.otherwise(F.col("k")))
-    else:
-        ref = (F.when(both_rect, rect_ans)
-               .when(native.is_convex(ga) & native.is_convex(gb),
-                     F.coalesce(F.col("k"), F.lit(False)))
-               .otherwise(chain.otherwise(F.lit(False))))
-    return sorted((r.ia, r.ib) for r in cand.where(ref).collect())
+    return (F.when(both_rect, rect_ans)
+            .when(native.is_convex(ga) & native.is_convex(gb),
+                  F.coalesce(F.col("k"), F.lit(False)))
+            .otherwise(chain.otherwise(F.lit(False))))
+
+
+def _pairs(df):
+    return sorted((r.ia, r.ib) for r in df.select("ia", "ib").collect())
+
+
+def _when_chain_pairs(df, predicate, general):
+    """Pairs of the pre-kernel `when` chain over every bbox-overlapping
+    pair of ``df`` with itself."""
+    return _pairs(_bbox_candidates(df, predicate)
+                  .where(_when_chain(predicate, general)))
 
 
 @pytest.mark.parametrize("predicate", ["intersects", "contains"])
@@ -649,3 +695,24 @@ def test_kernel_refine_plan_shape(mixed_df):
     plan = sat._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
     assert ", rect, " in plan and ", cvx, " in plan
+
+
+@pytest.mark.parametrize("predicate", ["intersects", "contains"])
+@pytest.mark.parametrize("general", [True, False])
+def test_kernel_refine_nan_matches_when_chain(mixed_nan_df, predicate,
+                                              general):
+    """With NaN coordinates the kernel keeps exactly the pairs of the
+    `when` chain: it compares doubles in Catalyst's order (NaN above
+    every number, NaN = NaN). Both refines read one bbox candidate set:
+    the grid files NaN bounds under cell 0, so spatial_join's candidates
+    for NaN rows differ from a bbox scan whatever the refine."""
+    from arctic_spark.functions import udfs
+    cand = _bbox_candidates(mixed_nan_df, predicate)
+    got = _pairs(cand.where(F.coalesce(
+        udfs.join_refine(F.col("ga"), F.col("gb"), predicate,
+                         general=general), F.lit(False))))
+    want = _pairs(cand.where(_when_chain(predicate, general)))
+    # the NaN points equal each other in Catalyst
+    assert (1000, 1001) in want
+    assert sum(a >= 1000 or b >= 1000 for a, b in want) > 5
+    assert got == want
