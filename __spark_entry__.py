@@ -555,8 +555,8 @@ def geo_eqdc_moll(spark, sf):
 
 def geo_pip_join(spark, sf):
     """Distributed filter–refine spatial join (SURVEY §2.4): customer
-    points in region strip polygons; grid-cell shuffle + native ray-cast
-    refine, zero Python in the plan (udf_refine=False)."""
+    points in region strip polygons; grid-cell shuffle + the pure-JVM
+    points_left refine, zero Python in the plan."""
     c = _t(spark, sf, "customer")
     r = _t(spark, sf, "region")
     px = (F.col("c_custkey") % 40 - 20).cast("double") + 0.5
@@ -567,9 +567,8 @@ def geo_pip_join(spark, sf):
     strips = GeoDataFrame(r.select(
         "r_name", st.make_envelope(xmin, F.lit(-20.0), xmin + 8.0,
                                    F.lit(20.0)).alias("geometry")))
-    out = spatial_join(points, strips, how="inner", udf_refine=False,
-                       broadcast_right=True, cell_size=8.0,
-                       points_left=True)
+    out = spatial_join(points, strips, how="inner", broadcast_right=True,
+                       cell_size=8.0, points_left=True)
     return (out.df.groupBy(F.col("r_name_right").alias("r_name"))
             .agg(F.count("*").alias("n_points")))
 
@@ -577,7 +576,7 @@ def geo_pip_join(spark, sf):
 def geo_pip_join_large(spark, sf):
     """Heavyweight spatial join: one point per lineitem row (~600k at
     sf0.1) against 100 supplier rectangles — the grid filter–refine path
-    under real row counts, fully native refine."""
+    under real row counts, pure-JVM points_left refine."""
     li = _t(spark, sf, "lineitem")
     s = _t(spark, sf, "supplier")
     px = (F.col("l_orderkey") % 1000).cast("double") / 5.0 + 0.05
@@ -590,9 +589,8 @@ def geo_pip_join_large(spark, sf):
     rects = GeoDataFrame(s.select(
         "s_suppkey", st.make_envelope(gx, gy, gx + 18.0, gy + 18.0)
         .alias("geometry")))
-    out = spatial_join(points, rects, how="inner", udf_refine=False,
-                       broadcast_right=True, cell_size=20.0,
-                       points_left=True)
+    out = spatial_join(points, rects, how="inner", broadcast_right=True,
+                       cell_size=20.0, points_left=True)
     return (out.df.groupBy(F.col("s_suppkey_right").alias("s_suppkey"))
             .agg(F.count("*").alias("n_points")))
 
@@ -726,16 +724,13 @@ def _supplier_rects(sf_df):
 
 
 def geo_poly_join(spark, sf):
-    """Rectangle×rectangle spatial join on the 100%-native plan
-    (udf_refine=False): axis-rect pairs refine as pure interval algebra
-    on the hoisted bbox columns inside whole-stage codegen — zero Python
-    anywhere, the plan a tile/extent workload should run at 100 TB. The
-    general vectorized polygon kernel is gated separately by
+    """Rectangle×rectangle spatial join: the join_refine kernel sends
+    axis-rect pairs to its closed-interval test, so the general polygon
+    kernel never runs here; it is gated separately by
     geo_diamond_join."""
     boxes = _order_boxes(_t(spark, sf, "orders"))
     rects = _supplier_rects(_t(spark, sf, "supplier"))
-    out = spatial_join(boxes, rects, how="inner", broadcast_right=True,
-                       udf_refine=False)
+    out = spatial_join(boxes, rects, how="inner", broadcast_right=True)
     return (out.df.groupBy(F.col("s_suppkey_right").alias("s_suppkey"))
             .agg(F.count("*").alias("n_boxes"),
                  F.sum(F.col("o_orderkey_left") % 1000).cast("long")
@@ -743,13 +738,12 @@ def geo_poly_join(spark, sf):
 
 
 def geo_poly_contains_join(spark, sf):
-    """Rect-contains-rect join, native interval-containment refine (see
-    geo_poly_join); the general contains kernel is gated by
-    geo_diamond_contains_join."""
+    """Rect-contains-rect join, interval-containment branch of the
+    join_refine kernel (see geo_poly_join); the general contains kernel
+    is gated by geo_diamond_contains_join."""
     boxes = _order_boxes(_t(spark, sf, "orders"))
     rects = _supplier_rects(_t(spark, sf, "supplier"))
-    out = spatial_join(rects, boxes, how="inner", predicate="contains",
-                       udf_refine=False)
+    out = spatial_join(rects, boxes, how="inner", predicate="contains")
     return (out.df.groupBy(F.col("s_suppkey_left").alias("s_suppkey"))
             .agg(F.count("*").alias("n_inside"),
                  F.sum(F.col("o_orderkey_right") % 1000).cast("long")
@@ -783,23 +777,18 @@ def _supplier_diamonds(sf_df):
 
 
 def geo_diamond_join(spark, sf):
-    """Polygon×polygon join on the all-convex workload: the refine
-    kernel's convexity test routes every candidate to the exact kernel.
-    r13 (VERDICT r12 #1): convex_refine="kernel" — the vectorized
-    Arrow batch kernel replaces the r6 separating-axis Catalyst
-    expressions, which are lambda-HOF trees Spark evaluates outside
-    codegen at ~0.2 ms/pair (349 core-s here, the engine's worst
-    per-task cost). Same-session stress A/B over an identical
-    12.2M-pair candidate set: SAT 76.6 s vs kernel 13.9 s (5.5×),
-    equal match counts (scripts/stress_refine_ab.py); the SAT path
-    stays available (convex_refine="sat") and remains the
-    udf_refine=False default for rect/tile workloads. The oracle is
-    the L1-ball intersection criterion. The general-kernel RECT gate
-    is geo_concave_join."""
+    """Polygon×polygon join on the all-convex workload: no candidate is
+    a rectangle or a point, so the join_refine kernel sends every pair
+    to the exact vectorized intersects kernel (geom/batch.py). It
+    replaced the r6 separating-axis Catalyst expressions, lambda-HOF
+    trees Spark evaluates outside codegen at ~0.2 ms/pair: stress A/B
+    over an identical 12.2M-pair candidate set, SAT 76.6 s vs kernel
+    13.9 s (5.5×), equal match counts. The oracle is the L1-ball
+    intersection criterion. The general-kernel RECT gate is
+    geo_concave_join."""
     d1 = _order_diamonds(_t(spark, sf, "orders"))
     d2 = _supplier_diamonds(_t(spark, sf, "supplier"))
-    out = spatial_join(d1, d2, how="inner", broadcast_right=True,
-                       udf_refine=False, convex_refine="kernel")
+    out = spatial_join(d1, d2, how="inner", broadcast_right=True)
     return (out.df.groupBy(F.col("s_suppkey_right").alias("s_suppkey"))
             .agg(F.count("*").alias("n_hits"),
                  F.sum(F.col("o_orderkey_left") % 1000).cast("long")
@@ -809,16 +798,14 @@ def geo_diamond_join(spark, sf):
 def geo_diamond_contains_join(spark, sf):
     """Polygon-contains-polygon on the all-convex workload: supplier
     diamond contains order diamond iff L1dist(centers) + r_order <=
-    r_supplier. r13: convex_refine="kernel" — stress A/B over an
-    identical 43.4M-pair candidate set: half-plane HOF 95.4 s vs
-    batch kernel 47.1 s (2.0×), equal match counts
-    (scripts/stress_refine_ab.py, predicate=contains); see
+    r_supplier. The exact contains kernel replaced the r6 half-plane
+    HOF refine: stress A/B over an identical 43.4M-pair candidate set,
+    HOF 95.4 s vs batch kernel 47.1 s (2.0×), equal match counts; see
     geo_diamond_join."""
     d1 = _order_diamonds(_t(spark, sf, "orders"))
     d2 = _supplier_diamonds(_t(spark, sf, "supplier"))
     out = spatial_join(d2, d1, how="inner", predicate="contains",
-                       broadcast_right=False, udf_refine=False,
-                       convex_refine="kernel")
+                       broadcast_right=False)
     return (out.df.groupBy(F.col("s_suppkey_left").alias("s_suppkey"))
             .agg(F.count("*").alias("n_inside"),
                  F.sum(F.col("o_orderkey_right") % 1000).cast("long")
@@ -828,8 +815,8 @@ def geo_diamond_contains_join(spark, sf):
 def _supplier_ells(sf_df):
     """Concave L-shaped hexagons on the supplier grid — the union of a
     wide 15×4 bar and a tall 4×11 bar sharing the corner at (gx, gy).
-    Concavity defeats both the rect and the convex-SAT native paths, so
-    candidate refine MUST run the general vectorized Python kernel.
+    Concavity defeats the rect branch of the refine, so candidate
+    refine MUST run the general vectorized Python kernel.
     Fractional offsets (.55 vs the boxes' .05-grid) keep every edge off
     every box edge — no boundary-tie semantics in the oracle."""
     gx = (F.col("s_suppkey") % 10).cast("double") * 20.0 + 0.55
@@ -844,11 +831,11 @@ def _supplier_ells(sf_df):
 
 def geo_concave_join(spark, sf):
     """Rect×CONCAVE spatial join — the oracle gate for the GENERAL
-    whole-batch vectorized intersects kernel (geom/batch.py), which the
-    round-6 convex SAT path no longer covers: an L-shape is the union of
-    two axis rectangles, so box∩L is closed-form interval algebra
-    (box∩bar1 or box∩bar2) while the engine must refine through the
-    Python kernel (right side is neither a rect nor convex)."""
+    whole-batch vectorized intersects kernel (geom/batch.py) on concave
+    input: an L-shape is the union of two axis rectangles, so box∩L is
+    closed-form interval algebra (box∩bar1 or box∩bar2) while the engine
+    must refine through the Python kernel (right side is not a
+    rect)."""
     boxes = _order_boxes(_t(spark, sf, "orders"))
     ells = _supplier_ells(_t(spark, sf, "supplier"))
     out = spatial_join(boxes, ells, how="inner", broadcast_right=True)

@@ -584,13 +584,14 @@ def centroid(g) -> Column:
 
 @_geom_fn
 def x(g) -> Column:
-    """x of Point geometries, null otherwise (reference geoseries.rs:177)."""
-    return F.when(g["gt"] == POINT, F.element_at(g["xs"], 1))
+    """x of Point geometries, null otherwise — POINT EMPTY included
+    (reference geoseries.rs:177)."""
+    return F.when(g["gt"] == POINT, F.try_element_at(g["xs"], F.lit(1)))
 
 
 @_geom_fn
 def y(g) -> Column:
-    return F.when(g["gt"] == POINT, F.element_at(g["ys"], 1))
+    return F.when(g["gt"] == POINT, F.try_element_at(g["ys"], F.lit(1)))
 
 
 def geom_type_id(g) -> Column:
@@ -1190,105 +1191,6 @@ def collect_agg(g) -> Column:
                     F.flatten(F.collect_list(g["ys"])),
                     F.flatten(F.collect_list(g["rings"])),
                     F.flatten(F.collect_list(g["parts"]))))
-
-
-def _edge_structs(g):
-    """array<struct<x1,y1,x2,y2>> of a single-ring geometry's segments —
-    whole-array slices, no offsets machinery (ring is stored closed)."""
-    n = F.size(g["xs"])
-    x1 = F.slice(g["xs"], 1, n - 1)
-    x2 = F.slice(g["xs"], 2, n - 1)
-    y1 = F.slice(g["ys"], 1, n - 1)
-    y2 = F.slice(g["ys"], 2, n - 1)
-    return F.zip_with(
-        F.zip_with(x1, y1, lambda a, b: F.struct(a.alias("x1"),
-                                                 b.alias("y1"))),
-        F.zip_with(x2, y2, lambda a, b: F.struct(a.alias("x2"),
-                                                 b.alias("y2"))),
-        lambda s1, s2: F.struct(s1["x1"].alias("x1"), s1["y1"].alias("y1"),
-                                s2["x2"].alias("x2"), s2["y2"].alias("y2")))
-
-
-@_geom_fn
-def is_convex(g) -> Column:
-    """Single-ring polygon whose boundary turns consistently: every
-    consecutive-edge cross product shares one sign (zeros — collinear
-    vertices — allowed). Routes convex×convex candidate pairs onto the
-    native SAT refine in the spatial join (the polygon analogue of
-    ``is_axis_rect``). Documented caveat: a consistently-turning ring
-    that winds around more than once (self-overlapping — invalid as a
-    polygon) also passes; such inputs fail ``st.is_valid`` and their
-    join semantics are undefined either way."""
-    n = F.size(g["xs"])
-    ex = F.zip_with(F.slice(g["xs"], 2, n - 1), F.slice(g["xs"], 1, n - 1),
-                    lambda a, b: a - b)
-    ey = F.zip_with(F.slice(g["ys"], 2, n - 1), F.slice(g["ys"], 1, n - 1),
-                    lambda a, b: a - b)
-
-    def turns_ok(p):
-        aex, aey = p["ex"], p["ey"]
-        m = F.size(aex)
-        # e_{i+1} with wraparound: [e_2..e_{n-1}, e_1]
-        sx = F.concat(F.slice(aex, 2, m - 1), F.slice(aex, 1, 1))
-        sy = F.concat(F.slice(aey, 2, m - 1), F.slice(aey, 1, 1))
-        e1 = F.zip_with(aex, aey, lambda a, b: F.struct(a.alias("a"),
-                                                        b.alias("b")))
-        e2 = F.zip_with(sx, sy, lambda a, b: F.struct(a.alias("a"),
-                                                      b.alias("b")))
-        t = F.zip_with(e1, e2,
-                       lambda p1, p2: p1["a"] * p2["b"] - p1["b"] * p2["a"])
-        return (F.forall(t, lambda v: v >= 0)
-                | F.forall(t, lambda v: v <= 0))
-
-    ok = _let(F.struct(ex.alias("ex"), ey.alias("ey")), turns_ok)
-    return F.when(_valid(g),
-                  (g["gt"] == POLYGON) & (F.size(g["rings"]) == 1)
-                  & (n >= 4) & ok)
-
-
-def convex_intersects(g1, g2) -> Column:
-    """Separating-axis intersects for two CONVEX single-ring polygons —
-    boundary-inclusive, pure Catalyst higher-order expressions (the
-    spatial join's zero-Python refine for convex pairs; exact for convex
-    operands by the separating-axis theorem). Callers must guard with
-    ``is_convex`` on both sides."""
-    a, b = _g(g1), _g(g2)
-
-    def separated_on_axes_of(p, q):
-        def sep(e):
-            nx = e["y1"] - e["y2"]
-            ny = e["x2"] - e["x1"]
-            pa = F.zip_with(p["xs"], p["ys"],
-                            lambda px, py: nx * px + ny * py)
-            pb = F.zip_with(q["xs"], q["ys"],
-                            lambda px, py: nx * px + ny * py)
-            return ((F.array_max(pa) < F.array_min(pb))
-                    | (F.array_max(pb) < F.array_min(pa)))
-        return F.exists(_edge_structs(p), sep)
-
-    return (~separated_on_axes_of(a, b)) & (~separated_on_axes_of(b, a))
-
-
-def convex_contains(g1, g2) -> Column:
-    """g1 ⊇ g2 for CONVEX single-ring polygons: every vertex of g2 on
-    the interior-or-boundary side of every g1 edge (boundary-inclusive,
-    matching the engine's covers-style contains). Pure Catalyst; guard
-    with ``is_convex`` on both sides."""
-    a, b = _g(g1), _g(g2)
-    s = F.signum(_signed_area_span(a, F.lit(0), F.size(a["xs"])))
-
-    def all_inside(sign):
-        def edge_ok(e):
-            crosses = F.zip_with(
-                b["xs"], b["ys"],
-                lambda px, py: ((e["x2"] - e["x1"]) * (py - e["y1"])
-                                - (e["y2"] - e["y1"]) * (px - e["x1"])))
-            return F.when(sign > 0, F.array_min(crosses) >= 0) \
-                    .otherwise(F.array_max(crosses) <= 0)
-        return F.forall(_edge_structs(a), edge_ok)
-
-    return F.when((F.size(b["xs"]) > 0) & (s != 0), _let(s, all_inside)) \
-            .otherwise(F.lit(False))
 
 
 @_geom_fn

@@ -390,18 +390,17 @@ def contains(g1: pa.Array, g2: pa.Array) -> pa.Array:
                     mask=miss if miss.any() else None)
 
 
-def join_refine(g1, g2, predicate: str, general: bool = True):
+def join_refine(g1, g2, predicate: str):
     """The grid spatial join's whole refine as one Arrow kernel
     (geom/batch.py join_refine: rectangle interval test, boundary-
-    exclusive point-in-polygon, point equality, then the exact kernel —
-    or, with ``general=False``, the exact kernel for convex × convex
-    pairs only). NULL when either side is missing."""
+    exclusive point-in-polygon, point equality, then the exact
+    kernel). NULL when either side is missing."""
 
     @arrow_udf(T.BooleanType())
     def _refine(a: pa.Array, b: pa.Array) -> pa.Array:
         r1, r2 = ragged_from_arrow(a), ragged_from_arrow(b)
         miss = (r1.gt == MISSING) | (r2.gt == MISSING)
-        return pa.array(batch.join_refine(r1, r2, predicate, general),
+        return pa.array(batch.join_refine(r1, r2, predicate),
                         mask=miss if miss.any() else None)
     return _refine(g1, g2)
 
@@ -766,6 +765,32 @@ def ring_stats(g, xmin: float, ymin: float, xmax: float, ymax: float):
     return _stats(g)
 
 
+def sequential_row_sums(vals: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Per-row left-to-right sums of ``vals``, whose rows lie end to end
+    (row i holds ``counts[i]`` values): bit-identical to the fold
+    ``s = v0; s += v1; ...`` (0.0 for an empty row). np.add.reduceat
+    sums pairwise (bit-different); np.cumsum folds sequentially, so each
+    row is cumsum'ed in a zero-padded matrix and read at its own last
+    column. Rows are grouped by ``counts`` rounded up to a power of two,
+    so one long row pads only its own group: the padded cells stay
+    under 2 * vals.size whatever the skew."""
+    counts = np.asarray(counts, dtype=np.int64)
+    out = np.zeros(counts.size)
+    starts = np.cumsum(counts) - counts
+    # smallest power of two >= count (frexp's exponent is bit_length)
+    width = np.left_shift(1, np.frexp(np.maximum(counts - 1, 0))[1])
+    live = counts > 0
+    for w in np.unique(width[live]):
+        rows = np.flatnonzero(live & (width == w))
+        cols = np.arange(w)
+        inside = cols < counts[rows, None]
+        pad = np.zeros((rows.size, w))
+        pad[inside] = vals[(starts[rows, None] + cols)[inside]]
+        out[rows] = np.cumsum(pad, axis=1)[np.arange(rows.size),
+                                           counts[rows] - 1]
+    return out
+
+
 def line_ref_stats(line, q, interp_t: float, max_seg: float):
     """Fused linear-referencing battery (r13) — the geo_line_refs
     metric set in ONE Arrow exchange:
@@ -873,7 +898,6 @@ def line_ref_stats(line, q, interp_t: float, max_seg: float):
             full_x = np.empty(tot)
             full_y = np.empty(tot)
             ends = np.cumsum(row_tot)
-            starts_r = ends - row_tot
             fill = np.ones(tot, dtype=bool)
             fill[ends - 1] = False
             full_x[fill] = sub_x
@@ -884,20 +908,11 @@ def line_ref_stats(line, q, interp_t: float, max_seg: float):
             hy = np.diff(full_y)
             h = np.sqrt(hx * hx + hy * hy)
             # per-row SEQUENTIAL sum matching _length_span's
-            # left-to-right fold: np.add.reduceat uses pairwise
-            # summation (bit-different), np.cumsum does not — scatter
-            # the within-row hypots into a zero-padded (m, maxc)
-            # matrix and cumsum along axis 1 (trailing +0.0 terms
-            # cannot change a non-negative partial sum)
-            cnt = row_tot - 1
-            rowid_h = np.repeat(np.arange(m), row_tot)[:-1]
+            # left-to-right fold (drop the hypots that span two rows)
             within = np.ones(h.size, dtype=bool)
             within[ends[:-1] - 1] = False
-            rows_w = rowid_h[within]
-            col = np.flatnonzero(within) - starts_r[rows_w]
-            pad = np.zeros((m, int(cnt.max())))
-            pad[rows_w, col] = h[within]
-            fo["seg_len"][rows] = np.cumsum(pad, axis=1)[rr, cnt - 1]
+            fo["seg_len"][rows] = sequential_row_sums(h[within],
+                                                      row_tot - 1)
             # --- reverse + interpolate 0 = the stored last vertex
             fo["rev_x"][rows] = X[:, -1]
             fo["rev_y"][rows] = Y[:, -1]

@@ -555,7 +555,7 @@ def overlaps(r1: RaggedGeometry, r2: RaggedGeometry) -> np.ndarray:
 # ---------------------------------------------------------------------------
 # spatial-join refine: the per-pair type dispatch of the grid join, with
 # numpy twins of the Catalyst shape flags and ray cast it used to run
-# (functions/native.py: is_axis_rect, is_convex, contains_point)
+# (functions/native.py: is_axis_rect, contains_point)
 # ---------------------------------------------------------------------------
 
 # Catalyst orders doubles with NaN above every number and NaN = NaN
@@ -626,33 +626,6 @@ def is_axis_rect(rg: RaggedGeometry) -> np.ndarray:
     return (rg.gt == POLYGON) & _rect_shape(rg)
 
 
-def is_convex(rg: RaggedGeometry) -> np.ndarray:
-    """Vector twin of native.is_convex: a one-ring polygon of >= 4
-    vertices whose consecutive-edge cross products (with wraparound)
-    all share one sign, zeros allowed. Same products in the same order
-    (``ex_i * ey_i+1 - ey_i * ex_i+1``) and Catalyst's NaN ordering, so
-    ties and NaN turns decide identically."""
-    n = len(rg)
-    co = rg.coord_offsets
-    cand = ((rg.gt == POLYGON) & (np.diff(rg.ring_offsets) == 1)
-            & (np.diff(co) >= 4))
-    if not cand.any():
-        return cand
-    # edge p runs from coordinate p to p + 1; the last coordinate of a
-    # geometry starts no edge, and the last edge wraps to the first
-    gidx = _coord_geom_index(rg)
-    last = np.arange(gidx.size) + 1 == co[gidx + 1]
-    pos = np.flatnonzero(cand[gidx] & ~last)
-    g = gidx[pos]
-    nxt = np.where(pos + 2 == co[g + 1], co[g], pos + 1)
-    ex, ey = rg.xs[pos + 1] - rg.xs[pos], rg.ys[pos + 1] - rg.ys[pos]
-    nx, ny = rg.xs[nxt + 1] - rg.xs[nxt], rg.ys[nxt + 1] - rg.ys[nxt]
-    t = ex * ny - ey * nx
-    not_all_ge = np.bincount(g, weights=~_ge(t, 0.0), minlength=n) > 0
-    not_all_le = np.bincount(g, weights=~_le(t, 0.0), minlength=n) > 0
-    return cand & ~(not_all_ge & not_all_le)
-
-
 def contains_point_strict(poly: RaggedGeometry, px: np.ndarray,
                           py: np.ndarray, active: np.ndarray) -> np.ndarray:
     """Vector twin of native.contains_point for pair i = (polygon i,
@@ -695,8 +668,8 @@ def _point_xy(rg: RaggedGeometry):
     return px, py, has
 
 
-def join_refine(r1: RaggedGeometry, r2: RaggedGeometry, predicate: str,
-                general: bool = True) -> np.ndarray:
+def join_refine(r1: RaggedGeometry, r2: RaggedGeometry,
+                predicate: str) -> np.ndarray:
     """The grid spatial join's exact refine for candidate pairs
     (r1[i], r2[i]), ``predicate`` in {'intersects', 'contains'}. Per
     pair, first match wins:
@@ -710,9 +683,7 @@ def join_refine(r1: RaggedGeometry, r2: RaggedGeometry, predicate: str,
       predicates to it);
     - point × point: coordinate equality;
     - any other pair: the exact :func:`intersects` / :func:`contains`
-      kernel when ``general``; otherwise only convex × convex pairs
-      reach that kernel and the rest are False (the join's
-      ``udf_refine=False, convex_refine="kernel"`` mode).
+      kernel.
 
     Pairs with a missing side come back False; callers mask them."""
     if predicate not in ("intersects", "contains"):
@@ -747,8 +718,6 @@ def join_refine(r1: RaggedGeometry, r2: RaggedGeometry, predicate: str,
         m = todo & pt1 & pt2 & has1 & has2
         out |= m & _eq(px1, px2) & _eq(py1, py2)
         todo &= ~((pt1 & pg2) | (pt2 & pg1) | (pt1 & pt2))
-    if not general:
-        todo &= is_convex(r1) & is_convex(r2)
     if todo.any():
         kern = intersects if predicate == "intersects" else contains
         out |= todo & kern(r1, r2)

@@ -12,15 +12,13 @@ the same filter–refine structure but distributes each phase:
 2. **join**: equi-join on cell id — a plain shuffled hash join Catalyst
    plans (AQE skew-join splits hot cells; `broadcast_right=True` short-
    circuits the shuffle for a small dim side);
-3. **refine**: exact predicate per candidate. If the refine has an
-   Arrow kernel, the kernel is the whole refine: one ``arrow_udf``
-   (``udfs.join_refine``) does the per-pair dispatch in numpy —
+3. **refine**: exact predicate per candidate, one ``arrow_udf``
+   (``udfs.join_refine``) that does the per-pair dispatch in numpy —
    rectangle interval test, boundary-exclusive point-in-polygon, point
    equality, exact general predicate — like the reference's one
-   predicate call per R-tree candidate. With ``udf_refine=False`` (and
-   ``convex_refine`` other than "kernel") the refine stays Catalyst-
-   native — ray cast for point/polygon pairs, rect interval algebra,
-   convex SAT — and the plan has no Python node;
+   predicate call per R-tree candidate. ``points_left=True`` keeps a
+   pure-JVM refine instead (rect interval test, Catalyst ray cast,
+   point equality) and the plan has no Python node;
 4. **dedup-free reporting**: a candidate pair can meet in several cells;
    only the canonical cell (the one containing the min corner of the
    bbox intersection) reports it, so no distinct()/re-shuffle is needed —
@@ -66,18 +64,17 @@ def _cells_for_bounds(xmin, ymin, xmax, ymax, cell_size):
                                                    cy.alias("cy")))))
 
 
-def _with_cells(df, geom_col, cell_size, prefix, flags=False,
-                pad=0.0):
+def _with_cells(df, geom_col, cell_size, prefix, rect=False, pad=0.0):
     """Attach per-row join metadata columns (bbox, grid cell) and explode
     one row per covered cell.
 
     Every derived quantity — bounds, the cell array, and (with
-    ``flags=True``, for the pure-JVM "sat" refine and ``points_left``)
-    the rect/convex fast-path flags — is computed inside
-    ONE ``_let``-bound struct column ``<prefix>meta``. This matters for
-    EXPRESSION-BUILT geometry (st.make_polygon over numeric columns, the
-    common ingest pattern): Catalyst inlines a computed column into every
-    reference, so deriving bbox/cells/flags as separate columns
+    ``rect=True``, for the ``points_left`` refine) the axis-rectangle
+    flag — is computed inside ONE ``_let``-bound struct column
+    ``<prefix>meta``. This matters for EXPRESSION-BUILT geometry
+    (st.make_polygon over numeric columns, the common ingest pattern):
+    Catalyst inlines a computed column into every reference, so
+    deriving bbox/cells/flags as separate columns
     re-evaluated the whole construction ~9x per row (measured: the
     diamond-join candidate phase dropped from 6.4 s to 2.7 s at sf0.1
     when the construction was no longer re-inlined). Parquet-scanned
@@ -96,9 +93,8 @@ def _with_cells(df, geom_col, cell_size, prefix, flags=False,
                   xmax.alias("xmax"), ymax.alias("ymax"),
                   _cells_for_bounds(xmin, ymin, xmax, ymax, cs)
                   .alias("cells")]
-        if flags:
-            fields += [native.is_axis_rect(gg).alias("rect"),
-                       native.is_convex(gg).alias("cvx")]
+        if rect:
+            fields.append(native.is_axis_rect(gg).alias("rect"))
         return F.struct(*fields)
 
     meta = prefix + "meta"
@@ -110,7 +106,7 @@ def _with_cells(df, geom_col, cell_size, prefix, flags=False,
     # the filter (measured 16 copies — the dominant cost for
     # expression-built geometry inputs).
     meta_col = _memo_col(("cells_meta", geom_col, cs, float(pad),
-                          bool(flags)),
+                          bool(rect)),
                          lambda: _opaque(native._let(g, build)))
     out = df.withColumn(meta, meta_col)
     return out.withColumn(prefix + "cell",
@@ -191,57 +187,34 @@ def estimate_cell_size(df, geom_col="geometry", sample_fraction=0.01,
 _memo_col = native.memo_col
 
 
-def _refine_predicate(lg, rg, predicate, udf_refine=True):
-    """Exact-predicate column for one candidate pair.
-
-    With ``udf_refine=True`` it is the Arrow refine kernel alone
-    (udfs.join_refine): the kernel does the whole per-pair dispatch —
+def _refine_predicate(lg, rg, predicate):
+    """Exact-predicate column for one candidate pair: the DE-9IM kernel
+    for touches/crosses/overlaps, else the Arrow refine kernel
+    (udfs.join_refine), which does the whole per-pair dispatch —
     rectangle interval test, boundary-exclusive point-in-polygon, point
     equality, exact general predicate. Catalyst fast paths next to it
     would be dead weight: Spark evaluates a Python UDF for every input
     row of its stage even under a `when` branch, so the kernel already
-    answers every pair.
-
-    ``udf_refine=False`` keeps the refine 100% JVM-native: point/
-    polygon pairs ray-cast in Catalyst, point/point pairs compare
-    coordinates, and every other pair evaluates to false — exactly the
-    reference's behavior for unhandled pairs (spatial_index.rs:89-137
-    returns false silently)."""
-    return _memo_col(("refine", lg, rg, predicate, bool(udf_refine)),
-                     lambda: _refine_predicate_build(lg, rg, predicate,
-                                                     udf_refine))
+    answers every pair."""
+    return _memo_col(("refine", lg, rg, predicate),
+                     lambda: _refine_predicate_build(lg, rg, predicate))
 
 
-def _refine_predicate_build(lg, rg, predicate, udf_refine):
+def _refine_predicate_build(lg, rg, predicate):
     lcol, rcol = F.col(lg), F.col(rg)
     if predicate in ("touches", "crosses", "overlaps"):
         # exact DE-9IM kernels (geom/relate.py via the batch UDFs) —
         # no native fast path exists for these, so the refine is the
         # kernel itself (candidates still bbox-pruned upstream)
         from .functions import udfs as _udfs
-        kern = getattr(_udfs, predicate)
-        return F.coalesce(kern(lcol, rcol), F.lit(False))
-    if udf_refine:
-        return F.coalesce(_join_refine_udf(lcol, rcol, predicate),
+        return F.coalesce(getattr(_udfs, predicate)(lcol, rcol),
                           F.lit(False))
-    point_l = lcol["gt"] == 0
-    point_r = rcol["gt"] == 0
-    return (F.when(point_l & rcol["gt"].isin(3, 6),
-                   native.contains_point(rcol, native.x(lcol),
-                                         native.y(lcol)))
-             .when(point_r & lcol["gt"].isin(3, 6),
-                   native.contains_point(lcol, native.x(rcol),
-                                         native.y(rcol)))
-             .when(point_l & point_r,
-                   (native.x(lcol) == native.x(rcol))
-                   & (native.y(lcol) == native.y(rcol)))
-             .otherwise(F.lit(False)))
+    return F.coalesce(_join_refine_udf(lcol, rcol, predicate), F.lit(False))
 
 
 def spatial_join(left, right, how="inner", predicate="intersects",
                  lsuffix="_left", rsuffix="_right", cell_size=None,
-                 broadcast_right=None, udf_refine=True, points_left=False,
-                 left_key=None, convex_refine="auto"):
+                 broadcast_right=None, points_left=False, left_key=None):
     """Distributed filter–refine spatial join.
 
     Parameters mirror the reference's SpatialJoinArgs
@@ -262,45 +235,39 @@ def spatial_join(left, right, how="inner", predicate="intersects",
     GeoDataFrame — call ``result.release()`` (arctic_spark.cache) when
     the output has been materialized.
 
-    ``convex_refine``: how convex×convex candidate pairs refine.
+    Refine: every intersects/contains candidate pair goes through one
+    Arrow kernel, ``udfs.join_refine`` (geom/batch.py): axis rectangle
+    pairs take the interval test, point/polygon pairs either way round
+    the boundary-exclusive ray cast, point pairs coordinate equality,
+    and every other pair the exact intersects/contains kernel. The
+    DE-9IM predicates (touches/crosses/overlaps) run their own exact
+    kernels.
 
-    * ``"kernel"`` — the vectorized Arrow batch kernel (geom/batch.py),
-      and then the kernel is the whole refine: one ``join_refine`` UDF
-      does the rect/point/polygon dispatch too, so the join metadata
-      carries only bounds and cells and the plan has no Catalyst HOF
-      refine. Under ``udf_refine=False`` only convex×convex pairs reach
-      the exact kernel; every other pair outside the rect/point fast
-      paths is false. Stress A/B over the identical 12.2M-pair candidate
-      set: SAT 76.6 s vs kernel 13.9 s (**5.5×**), equal match counts
-      (scripts/stress_refine_ab.py).
-    * ``"sat"`` — the r6 separating-axis Catalyst expressions on hoisted
-      rect/convex flags. Zero Python, but lambda-HOF trees evaluate
-      OUTSIDE codegen: measured 0.2 ms/pair. Tile/rect workloads keep
-      it under ``udf_refine=False``: their pairs take the pure-codegen
-      interval branch, and a kernel stage would tax them with boundary
-      traffic for nothing.
-    * ``"auto"`` (default) — ``"kernel"`` when ``udf_refine=True`` (a
-      Python UDF evaluates on every row of its stage anyway, since Spark
-      hoists it out of ``when``); ``"sat"`` when ``udf_refine=False``
-      (keeps the documented 100%-JVM plan).
-
-    On exact-touch (boundary-tie) pairs the SAT and kernel paths can
-    round differently in floating point — both are exact in real
-    arithmetic; fixtures/gates are constructed tie-free. The kernel
-    reproduces the Catalyst rect, ray-cast and point-equality formulas
-    term for term and compares doubles in Catalyst's order (NaN above
-    every number, NaN = NaN), so those pairs decide identically in
-    every mode, NaN coordinates included.
+    ``points_left=True`` (left side all points, predicate intersects or
+    contains) is the pure-JVM point-in-polygon join: each point sits in
+    one grid cell (no explode, no canonical-cell dedup) and the refine
+    is Catalyst only — interval test against the bbox of axis-rectangle
+    right rows, ``native.contains_point`` ray cast against other
+    polygons and multipolygons, coordinate equality against points. A
+    pair whose right side is any other type (line, multipoint, ...) is
+    False, as the reference's refine table returns false for unhandled
+    pairs (spatial_index.rs:89-137). It stays pure JVM because it is
+    measured faster: routing it through ``join_refine`` ran
+    geo_pip_join_large 2.0x slower at sf0.1 on 4 Xeon cores (median of
+    5 fresh processes, min of 3 warm reps each: 10.14 s vs 4.96 s), with
+    equal results. The kernel copies the Catalyst rect, ray-cast and
+    point-equality formulas term for term and compares doubles in
+    Catalyst's order (NaN above every number, NaN = NaN), so both
+    refines decide those pairs identically, ties and NaN included.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"join type {how!r} not supported (reference "
                          "supports Inner/Left, spatial_index.rs:200-203)")
     if predicate == "within":
         # left-within-right == right-contains-left: run the contains
-        # join with the SIDES swapped (so every native fast path — rect
-        # interval algebra, convex SAT — applies unchanged), then
-        # restore left-first column order. Inner only: a left outer
-        # would need the unmatched add-back on the swapped build side.
+        # join with the SIDES swapped, then restore left-first column
+        # order. Inner only: a left outer would need the unmatched
+        # add-back on the swapped build side.
         if how != "inner":
             raise ValueError("predicate='within' supports how='inner' "
                              "only (use predicate='contains' with the "
@@ -308,8 +275,7 @@ def spatial_join(left, right, how="inner", predicate="intersects",
         lgdf0 = left if isinstance(left, GeoDataFrame) else GeoDataFrame(left)
         sw = spatial_join(right, left, how="inner", predicate="contains",
                           lsuffix=rsuffix, rsuffix=lsuffix,
-                          cell_size=cell_size, udf_refine=udf_refine,
-                          convex_refine=convex_refine)
+                          cell_size=cell_size)
         lcols = [c + lsuffix for c in lgdf0.df.columns]
         rcols = [c for c in sw.df.columns if c not in lcols]
         return GeoDataFrame(sw.df.select(*lcols, *rcols),
@@ -319,27 +285,10 @@ def spatial_join(left, right, how="inner", predicate="intersects",
         raise ValueError(f"predicate {predicate!r} not supported; use "
                          "'intersects', 'contains', 'within', 'touches', "
                          "'crosses' or 'overlaps'")
-    if predicate in ("touches", "crosses", "overlaps"):
-        # DE-9IM predicates refine through the exact kernel only — the
-        # rect/convex fast paths and the points_left plan encode
-        # intersects/contains algebra
-        if not udf_refine:
-            raise ValueError(f"predicate {predicate!r} needs the exact "
-                             "kernel; udf_refine=False unsupported")
-        if points_left:
-            raise ValueError(f"points_left fast path does not apply to "
-                             f"predicate {predicate!r}")
-
-    if convex_refine not in ("auto", "sat", "kernel"):
-        raise ValueError(f"convex_refine {convex_refine!r} not "
-                         "supported; use 'auto', 'sat' or 'kernel'")
-    # when the Arrow kernel refines convex pairs it is the whole refine;
-    # otherwise the pure-JVM refine reads rect/convex shape flags from
-    # the join metadata
-    cvx_kernel = (convex_refine == "kernel"
-                  or (convex_refine == "auto" and udf_refine))
-    fast_paths = predicate in ("intersects", "contains")
-    sat_flags = fast_paths and not cvx_kernel
+    if points_left and predicate not in ("intersects", "contains"):
+        # the points_left refine encodes point-in-polygon algebra only
+        raise ValueError(f"points_left fast path does not apply to "
+                         f"predicate {predicate!r}")
 
     lgdf = left if isinstance(left, GeoDataFrame) else GeoDataFrame(left)
     rgdf = right if isinstance(right, GeoDataFrame) else GeoDataFrame(right)
@@ -397,9 +346,8 @@ def spatial_join(left, right, how="inner", predicate="intersects",
                       F.floor(F.col("__l_px") / csl).cast("int").alias("cx"),
                       F.floor(F.col("__l_py") / csl).cast("int").alias("cy"))))
     else:
-        lc = _with_cells(ldfs, lg, cell_size, "__l_", flags=sat_flags)
-    rc = _with_cells(rdfs, rg, cell_size, "__r_",
-                     flags=sat_flags or points_left)
+        lc = _with_cells(ldfs, lg, cell_size, "__l_")
+    rc = _with_cells(rdfs, rg, cell_size, "__r_", rect=points_left)
     if broadcast_right:
         rc = F.broadcast(rc)
 
@@ -416,6 +364,22 @@ def spatial_join(left, right, how="inner", predicate="intersects",
         canonical = F.lit(True)
         helper_cols = ["__l_cell", "__l_px", "__l_py", "__r_cell",
                        "__r_meta"]
+
+        # refine directly with the materialized coordinates: rectangle
+        # right → two interval tests on the precomputed bbox columns
+        # (zero geometry work per pair); other polygons → ray cast;
+        # point right → equality; any other right type → False
+        def _build_pip_refine():
+            rcol = F.col(rg)
+            rect_inside = ((px_ > rx0) & (px_ < rx1)
+                           & (py_ > ry0) & (py_ < ry1))
+            return (F.when(F.col("__r_meta.rect"), rect_inside)
+                    .when(rcol["gt"].isin(3, 6),
+                          native.contains_point(rcol, px_, py_))
+                    .when(rcol["gt"] == 0,
+                          (px_ == native.x(rcol)) & (py_ == native.y(rcol)))
+                    .otherwise(F.lit(False)))
+        refine = _memo_col(("pip", rg), _build_pip_refine)
     else:
         lx0, ly0 = F.col("__l_meta.xmin"), F.col("__l_meta.ymin")
         lx1, ly1 = F.col("__l_meta.xmax"), F.col("__l_meta.ymax")
@@ -428,60 +392,7 @@ def spatial_join(left, right, how="inner", predicate="intersects",
         canonical = ((F.floor(ix / cs).cast("int") == F.col("__l_cell.cx"))
                      & (F.floor(iy / cs).cast("int") == F.col("__l_cell.cy")))
         helper_cols = ["__l_cell", "__r_cell", "__l_meta", "__r_meta"]
-    if points_left:
-        # refine directly with the materialized coordinates: rectangle
-        # right → two interval tests on the precomputed bbox columns
-        # (zero geometry work per pair); other polygons → ray cast;
-        # point right → equality
-        def _build_pip_refine():
-            rcol = F.col(rg)
-            pxc, pyc = F.col("__l_px"), F.col("__l_py")
-            rect_inside = ((pxc > rx0) & (pxc < rx1)
-                           & (pyc > ry0) & (pyc < ry1))
-            return (F.when(F.col("__r_meta.rect"), rect_inside)
-                    .when(rcol["gt"].isin(3, 6),
-                          native.contains_point(rcol, pxc, pyc))
-                    .when(rcol["gt"] == 0,
-                          (pxc == native.x(rcol))
-                          & (pyc == native.y(rcol)))
-                    .otherwise(_refine_predicate(lg, rg, predicate,
-                                                 udf_refine)))
-        refine = _memo_col(("pip", lg, rg, predicate, bool(udf_refine)),
-                           _build_pip_refine)
-    else:
-        def _build_poly_refine():
-            if cvx_kernel and not udf_refine:
-                # only convex × convex pairs reach the exact kernel;
-                # rectangle and point pairs keep their fast-path answers
-                # and every other pair is False (batch.join_refine)
-                return F.coalesce(
-                    _join_refine_udf(F.col(lg), F.col(rg), predicate,
-                                     general=False), F.lit(False))
-            if cvx_kernel or not fast_paths:
-                return _refine_predicate(lg, rg, predicate, udf_refine)
-            # "sat": the pure-JVM refine. Axis-rect × axis-rect pairs
-            # are interval algebra on the hoisted bbox fields — for
-            # 'intersects' the bbox_ok filter already IS the exact
-            # closed-interval test; for 'contains' it is interval
-            # containment (boundary-inclusive, the engine's covers-style
-            # contains). Convex × convex pairs take the r6 separating-
-            # axis / half-plane expressions (interpreted lambda-HOFs).
-            both_rect = F.col("__l_meta.rect") & F.col("__r_meta.rect")
-            both_cvx = F.col("__l_meta.cvx") & F.col("__r_meta.cvx")
-            if predicate == "intersects":
-                rect_ans = F.lit(True)
-                cvx_ans = native.convex_intersects(F.col(lg), F.col(rg))
-            else:
-                rect_ans = ((lx0 <= rx0) & (rx1 <= lx1)
-                            & (ly0 <= ry0) & (ry1 <= ly1))
-                cvx_ans = native.convex_contains(F.col(lg), F.col(rg))
-            return (F.when(both_rect, rect_ans)
-                    .when(both_cvx, cvx_ans)
-                    .otherwise(_refine_predicate(lg, rg, predicate,
-                                                 udf_refine)))
-        refine = _memo_col(("poly", lg, rg, predicate, bool(udf_refine),
-                            bool(cvx_kernel)),
-                           _build_poly_refine)
+        refine = _refine_predicate(lg, rg, predicate)
     matched = (joined.where(bbox_ok & canonical)
                .where(refine)
                .drop(*helper_cols))

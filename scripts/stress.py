@@ -54,8 +54,8 @@ def main():
 
     t0 = time.perf_counter()
     out = spatial_join(GeoDataFrame(pts), GeoDataFrame(polys),
-                       udf_refine=False, points_left=True,
-                       broadcast_right=True, cell_size=100.0)
+                       points_left=True, broadcast_right=True,
+                       cell_size=100.0)
     n = out.df.count()
     report(f"spatial_join {n_points:,} pts x {n_polys:,} rects", t0, n)
 
@@ -130,9 +130,9 @@ def main():
         .groupBy("q", "r").count().count()
     report(f"hex density (one shuffle) over {n_points:,} pts", t0, n)
 
-    # round 6: convex SAT join at scale — diamonds on both sides defeat
-    # the rect fast path, so every candidate refines through the native
-    # separating-axis expressions (zero Python in the plan)
+    # diamond join at scale — diamonds on both sides defeat the rect
+    # fast path, so every candidate refines through the exact Arrow
+    # intersects kernel (udfs.join_refine)
     n_dia = max(n_points // 2, 100_000)
     dia = spark.range(n_dia).repartition(par).select(
         F.col("id"),
@@ -174,10 +174,9 @@ def main():
                     .cast("double"))).alias("geometry"))
     t0 = time.perf_counter()
     out = spatial_join(GeoDataFrame(dia), GeoDataFrame(big_dia),
-                       udf_refine=False, broadcast_right=True,
-                       cell_size=100.0)
+                       broadcast_right=True, cell_size=100.0)
     n = out.df.count()
-    report(f"convex SAT join {n_dia:,} diamonds x {n_polys:,} diamonds",
+    report(f"diamond join {n_dia:,} diamonds x {n_polys:,} diamonds",
            t0, n)
 
     # round 6: rect-overlay at scale — the vectorized axis-rect

@@ -2,13 +2,9 @@
 persisted candidate-pair set (>=10M pairs by default), same session
 (STRESS protocol).
 
-Arms A/B (r13, VERDICT r12 #1): interpreted-HOF convex-SAT refine vs
-the Arrow-batched general kernel. geo_diamond_join's refine —
-`native.convex_intersects`, a lambda-HOF Catalyst expression Spark
-evaluates OUTSIDE codegen — was measured at 349 core-s at sf0.1, the
-engine's worst per-task cost.
+Arm B: the Arrow-batched exact kernel alone — the cost floor that the
+arm C refines add their per-pair dispatch to.
 
-  A. native SAT:   where(convex_intersects(lg, rg))       [pure JVM]
   B. Arrow kernel: where(udfs.intersects(lg, rg))         [geom/batch]
 
 Arm C: the join's former default refine — a Catalyst `when` chain
@@ -28,9 +24,8 @@ side runs ``passes`` times with the min reported (warm cache).
 
 Usage: python scripts/stress_refine_ab.py [n_left] [n_right] [passes]
                                           [predicate]
-predicate 'contains' A/Bs convex_contains (half-plane HOF) against
-the batch contains kernel instead. Run with SPARK_DRIVER_MEMORY=48g
-for the 10M-pair default.
+predicate 'contains' runs the batch contains kernel instead. Run with
+SPARK_DRIVER_MEMORY=48g for the 10M-pair default.
 """
 
 from __future__ import annotations
@@ -132,13 +127,13 @@ def main():
                          F.col("geometry").alias("geometry_left"),
                          native.is_axis_rect(F.col("geometry"))
                          .alias("lrect")),
-            "geometry_left", cell, "__l_", flags=False)
+            "geometry_left", cell, "__l_")
         rc = _with_cells(
             d2.df.select(F.col("rid"),
                          F.col("geometry").alias("geometry_right"),
                          native.is_axis_rect(F.col("geometry"))
                          .alias("rrect")),
-            "geometry_right", cell, "__r_", flags=False)
+            "geometry_right", cell, "__r_")
         joined = lc.join(rc, (lc["__l_cell.cx"] == rc["__r_cell.cx"])
                          & (lc["__l_cell.cy"] == rc["__r_cell.cy"]),
                          "inner")
@@ -164,15 +159,8 @@ def main():
               f"({n_left:,} x {n_right:,} diamonds)", flush=True)
 
         lg, rg = F.col("geometry_left"), F.col("geometry_right")
-        if predicate == "contains":
-            # contains needs the left radii strictly larger so a
-            # meaningful fraction of pairs actually contain; the
-            # tie-free radii property still holds
-            sat, kern = native.convex_contains, udfs.contains
-        else:
-            sat, kern = native.convex_intersects, udfs.intersects
+        kern = udfs.contains if predicate == "contains" else udfs.intersects
         sides = {
-            "sat_hof": cand.where(sat(lg, rg)),
             "arrow_kernel": cand.where(
                 F.coalesce(kern(lg, rg), F.lit(False))),
             "when_chain_udf": cand.where(
@@ -194,13 +182,12 @@ def main():
                   f"min {min(times):.1f}s of {['%.1f' % t for t in times]} "
                   f"({n_cand / min(times) / 1e6:.2f}M pairs/s)",
                   flush=True)
-        for a_name, b_name in (("sat_hof", "arrow_kernel"),
-                               ("when_chain_udf", "join_refine")):
-            a, b = results[a_name], results[b_name]
-            assert a[0] == b[0], f"refine mismatch: {a[0]} vs {b[0]}"
-            print(f"match counts EXACTLY EQUAL ({a[0]:,}); "
-                  f"{b_name}/{a_name} speedup: {a[1] / b[1]:.2f}x",
-                  flush=True)
+        counts = {name: r[0] for name, r in results.items()}
+        assert len(set(counts.values())) == 1, f"refine mismatch: {counts}"
+        a, b = results["when_chain_udf"], results["join_refine"]
+        print(f"match counts EXACTLY EQUAL ({a[0]:,}); "
+              f"join_refine/when_chain_udf speedup: {a[1] / b[1]:.2f}x",
+              flush=True)
     finally:
         spark.stop()
 

@@ -50,8 +50,8 @@ def main():
                 st.make_envelope(gx, gy, gx + 9.0, gy + 9.0)
                 .alias("geometry")))
         out = spatial_join(pts, polys, how="inner",
-                           predicate="intersects", udf_refine=False,
-                           cell_size=10.0, points_left=True)
+                           predicate="intersects", cell_size=10.0,
+                           points_left=True)
 
         plan = out.df._jdf.queryExecution().executedPlan().toString()
         n_exchange = plan.count("Exchange ")

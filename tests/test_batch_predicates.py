@@ -186,7 +186,3 @@ def test_join_refine_dispatch():
     got_c = batch.join_refine(r1, r2, "contains")
     for i, c in enumerate(cases):
         assert (bool(got_i[i]), bool(got_c[i])) == (c[2], c[3]), c
-    # without the general kernel only convex x convex pairs reach it
-    lim = batch.join_refine(r1, r2, "intersects", general=False)
-    assert bool(lim[9]) is False and bool(lim[10]) is True
-    assert lim[:9].tolist() == got_i[:9].tolist()

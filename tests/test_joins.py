@@ -90,7 +90,7 @@ def test_unsupported_how(points_df, poly_df):
 
 
 def test_native_only_refine(points_df, poly_df):
-    out = spatial_join(points_df, poly_df, udf_refine=False).df
+    out = spatial_join(points_df, poly_df, points_left=True).df
     assert out.count() == 2
     # plan must not contain a Python evaluation node
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -99,7 +99,7 @@ def test_native_only_refine(points_df, poly_df):
 
 def test_broadcast_right(points_df, poly_df):
     out = spatial_join(points_df, poly_df, broadcast_right=True,
-                       udf_refine=False)
+                       points_left=True)
     assert out.df.count() == 2
     plan = out.df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -201,83 +201,6 @@ def test_nearest_join(spark):
                    (2, 20, 1.0)]
     with pytest.raises(ValueError, match="left_key"):
         nearest_join(left, right, max_distance=2.0)
-
-
-def test_convex_sat_matches_python_kernel(spark):
-    """Round 6: the native convex SAT / half-plane refine must agree with
-    the general vectorized Python kernel on random convex polygon pairs
-    (including touch-free separations, containments and crossings)."""
-    import math
-    import random
-
-    from arctic_spark.functions import native
-    from arctic_spark.functions.udfs import contains as contains_udf
-    from arctic_spark.functions.udfs import intersects as intersects_udf
-
-    rnd = random.Random(7)
-    rows = []
-    for i in range(120):
-        # random convex polygon: sorted angles on a noisy circle
-        def convex(cx, cy, rbase, nv):
-            angs = sorted(rnd.uniform(0, 2 * math.pi) for _ in range(nv))
-            pts = [(cx + rbase * (0.6 + 0.4 * rnd.random()) * math.cos(a),
-                    cy + rbase * (0.6 + 0.4 * rnd.random()) * math.sin(a))
-                   for a in angs]
-            # convex hull of the points guarantees convexity
-            pts = sorted(set(pts))
-            def half(ps):
-                h = []
-                for p in ps:
-                    while len(h) >= 2 and (
-                            (h[-1][0]-h[-2][0])*(p[1]-h[-2][1])
-                            - (h[-1][1]-h[-2][1])*(p[0]-h[-2][0])) <= 0:
-                        h.pop()
-                    h.append(p)
-                return h
-            lo = half(pts); hi = half(pts[::-1])
-            hull = lo[:-1] + hi[:-1]
-            return hull
-        a = convex(0.0, 0.0, 3.0, 8)
-        b = convex(rnd.uniform(-6, 6), rnd.uniform(-6, 6),
-                   rnd.uniform(0.5, 4.0), 7)
-        rows.append((i, [p[0] for p in a], [p[1] for p in a],
-                     [p[0] for p in b], [p[1] for p in b]))
-    df = spark.createDataFrame(
-        rows, "id long, ax array<double>, ay array<double>, "
-              "bx array<double>, by array<double>") \
-        .select("id",
-                st.make_polygon(F.col("ax"), F.col("ay")).alias("ga"),
-                st.make_polygon(F.col("bx"), F.col("by")).alias("gb"))
-    df = df.withColumn("cvx_a", native.is_convex(F.col("ga"))) \
-           .withColumn("cvx_b", native.is_convex(F.col("gb"))) \
-           .withColumn("sat_i", native.convex_intersects(F.col("ga"),
-                                                         F.col("gb"))) \
-           .withColumn("sat_c", native.convex_contains(F.col("ga"),
-                                                       F.col("gb"))) \
-           .withColumn("udf_i", intersects_udf(F.col("ga"), F.col("gb"))) \
-           .withColumn("udf_c", contains_udf(F.col("ga"), F.col("gb")))
-    out = df.collect()
-    assert all(r.cvx_a and r.cvx_b for r in out)
-    mism_i = [r.id for r in out if bool(r.sat_i) != bool(r.udf_i)]
-    mism_c = [r.id for r in out if bool(r.sat_c) != bool(r.udf_c)]
-    assert mism_i == [], f"intersects mismatch on ids {mism_i}"
-    assert mism_c == [], f"contains mismatch on ids {mism_c}"
-
-
-def test_is_convex_flags(spark):
-    from arctic_spark.functions import native
-    df = spark.createDataFrame(
-        [("sq", "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", True),
-         ("dia", "POLYGON ((1 0, 2 1, 1 2, 0 1, 1 0))", True),
-         ("coll", "POLYGON ((0 0, 1 0, 2 0, 2 2, 0 2, 0 0))", True),
-         ("ell", "POLYGON ((0 0, 4 0, 4 1, 1 1, 1 3, 0 3, 0 0))", False),
-         ("line", "LINESTRING (0 0, 1 1)", False),
-         ("pt", "POINT (1 1)", False)],
-        "name string, wkt string, expect boolean") \
-        .select("name", "expect", st.from_wkt("wkt").alias("g"))
-    df = df.select("name", "expect", native.is_convex(F.col("g")).alias("got"))
-    for r in df.collect():
-        assert bool(r.got) == r.expect, r.name
 
 
 def test_overlay_intersection_rect_grid(spark):
@@ -434,8 +357,8 @@ def test_sjoin_touches_overlaps_predicates(spark):
     assert [(r.aid_left, r.bid_right) for r in t] == [(1, 1)]
     o = spatial_join(a, b, predicate="overlaps").df.collect()
     assert [(r.aid_left, r.bid_right) for r in o] == [(2, 2)]
-    with pytest.raises(ValueError, match="udf_refine"):
-        spatial_join(a, b, predicate="touches", udf_refine=False)
+    with pytest.raises(ValueError, match="points_left"):
+        spatial_join(a, b, predicate="touches", points_left=True)
 
 
 def test_sjoin_crosses_predicate(spark):
@@ -462,27 +385,37 @@ def _diamond_frame(spark, ids, mult, r_base):
     return GeoDataFrame(df.select("id", poly.alias("geometry")))
 
 
+def _diamond_params(ids, mult, r_base):
+    """Center and radius per id of :func:`_diamond_frame`, in the same
+    double arithmetic."""
+    return {i: (((i * mult) % 2000) / 100.0,
+                ((i * 40503 + 7) % 2000) / 100.0,
+                r_base + float(i % 3) * 0.6013) for i in ids}
+
+
 @pytest.mark.parametrize("predicate", ["intersects", "contains"])
-def test_convex_refine_modes_agree(spark, predicate):
-    """r13: the convex_refine="kernel" (Arrow batch) path must produce
-    the exact pair set of the r6 "sat" (native HOF) path through the
-    full spatial_join, for both fast predicates, on a tie-free diamond
-    workload (the geo_diamond_join gate shape)."""
-    left = _diamond_frame(spark, range(1, 120), 2654435761, 4.9717)
-    right = _diamond_frame(spark, range(1, 40), 69069, 1.4431)
-
-    def pairs(mode, udf_refine):
-        out = spatial_join(left, right, predicate=predicate,
-                           udf_refine=udf_refine, convex_refine=mode)
-        return sorted((r.id_left, r.id_right) for r in out.df.collect())
-
-    base = pairs("sat", False)
-    assert len(base) > 5  # fixture actually exercises the refine
-    assert pairs("kernel", False) == base
-    assert pairs("auto", True) == base  # auto→kernel under udf_refine
-    assert pairs("auto", False) == base  # auto→sat stays the default
-    with pytest.raises(ValueError, match="convex_refine"):
-        spatial_join(left, right, convex_refine="nope")
+def test_diamond_join_matches_l1_criterion(spark, predicate):
+    """The default refine on the geo_diamond_join shape returns exactly
+    the closed-form L1-ball pairs: intersects iff |dx|+|dy| <= r1+r2,
+    left contains right iff |dx|+|dy| + r2 <= r1."""
+    lids, rids = range(1, 120), range(1, 40)
+    left = _diamond_frame(spark, lids, 2654435761, 4.9717)
+    right = _diamond_frame(spark, rids, 69069, 1.4431)
+    want, margin = [], []
+    for a, (ax, ay, ar) in _diamond_params(lids, 2654435761,
+                                           4.9717).items():
+        for b, (bx, by, br) in _diamond_params(rids, 69069,
+                                               1.4431).items():
+            d = abs(ax - bx) + abs(ay - by)
+            slack = ar + br - d if predicate == "intersects" else ar - br - d
+            margin.append(abs(slack))
+            if slack >= 0:
+                want.append((a, b))
+    assert min(margin) > 1e-3  # tie-free
+    assert len(want) > 100
+    out = spatial_join(left, right, predicate=predicate)
+    got = sorted((r.id_left, r.id_right) for r in out.df.collect())
+    assert got == sorted(want)
 
 
 def test_dwithin_points_fast_path_matches_general(spark, points_df):
@@ -620,12 +553,11 @@ def _bbox_candidates(df, predicate):
             .withColumn("k", kern(ga, gb)))
 
 
-def _when_chain(predicate, general):
+def _when_chain(predicate):
     """The refine as the join planned it before it became one Arrow
-    kernel, over a :func:`_bbox_candidates` frame: rect/convex shape
-    flags, the Catalyst boundary-exclusive ray cast and point equality
-    in a `when` chain, the exact kernel as the fallback (all pairs with
-    ``general``, else convex × convex pairs only)."""
+    kernel, over a :func:`_bbox_candidates` frame: the rect shape flags,
+    the Catalyst boundary-exclusive ray cast and point equality in a
+    `when` chain, the exact kernel as the fallback."""
     from arctic_spark.functions import native
     ga, gb = F.col("ga"), F.col("gb")
     ax0, ay0, ax1, ay1 = native.bounds(ga)
@@ -634,53 +566,66 @@ def _when_chain(predicate, general):
     rect_ans = F.lit(True) if predicate == "intersects" else (
         (ax0 <= bx0) & (bx1 <= ax1) & (ay0 <= by0) & (by1 <= ay1))
     point_a, point_b = ga["gt"] == 0, gb["gt"] == 0
-    chain = (F.when(point_a & gb["gt"].isin(3, 6),
-                    native.contains_point(gb, native.x(ga), native.y(ga)))
-             .when(point_b & ga["gt"].isin(3, 6),
-                   native.contains_point(ga, native.x(gb), native.y(gb)))
-             .when(point_a & point_b, (native.x(ga) == native.x(gb))
-                   & (native.y(ga) == native.y(gb))))
-    if general:
-        return F.when(both_rect, rect_ans).otherwise(
-            chain.otherwise(F.col("k")))
-    return (F.when(both_rect, rect_ans)
-            .when(native.is_convex(ga) & native.is_convex(gb),
-                  F.coalesce(F.col("k"), F.lit(False)))
-            .otherwise(chain.otherwise(F.lit(False))))
+    return F.when(both_rect, rect_ans).otherwise(
+        F.when(point_a & gb["gt"].isin(3, 6),
+               native.contains_point(gb, native.x(ga), native.y(ga)))
+        .when(point_b & ga["gt"].isin(3, 6),
+              native.contains_point(ga, native.x(gb), native.y(gb)))
+        .when(point_a & point_b, (native.x(ga) == native.x(gb))
+              & (native.y(ga) == native.y(gb)))
+        .otherwise(F.col("k")))
 
 
 def _pairs(df):
     return sorted((r.ia, r.ib) for r in df.select("ia", "ib").collect())
 
 
-def _when_chain_pairs(df, predicate, general):
+def _when_chain_pairs(df, predicate):
     """Pairs of the pre-kernel `when` chain over every bbox-overlapping
     pair of ``df`` with itself."""
     return _pairs(_bbox_candidates(df, predicate)
-                  .where(_when_chain(predicate, general)))
+                  .where(_when_chain(predicate)))
 
 
 @pytest.mark.parametrize("predicate", ["intersects", "contains"])
-@pytest.mark.parametrize("udf_refine,convex_refine",
-                         [(True, "auto"), (False, "kernel")])
-def test_kernel_refine_matches_when_chain(mixed_df, predicate, udf_refine,
-                                          convex_refine):
+def test_kernel_refine_matches_when_chain(mixed_df, predicate):
     """The one-kernel refine returns exactly the pairs of the `when`
-    chain it replaced, ties included, in both modes that run it."""
+    chain it replaced, ties included."""
     out = spatial_join(mixed_df, mixed_df, predicate=predicate,
-                       udf_refine=udf_refine, convex_refine=convex_refine,
                        cell_size=3.0)
     got = sorted((r.id_left, r.id_right) for r in out.df.collect())
-    want = _when_chain_pairs(mixed_df, predicate, general=udf_refine)
+    want = _when_chain_pairs(mixed_df, predicate)
     assert len(want) > 100
     assert got == want
+
+
+@pytest.mark.parametrize("predicate", ["intersects", "contains"])
+def test_points_left_matches_when_chain(mixed_df, predicate):
+    """The pure-JVM points_left refine keeps exactly the `when` chain's
+    pairs whose right side is a point, polygon or multipolygon; pairs
+    with any other right type are False."""
+    gt = {r.id: r.gt for r in mixed_df.select(
+        "id", F.col("geometry.gt").alias("gt")).collect()}
+    points = mixed_df.where(F.col("geometry.gt") == 0)
+    out = spatial_join(points, mixed_df, predicate=predicate,
+                       cell_size=3.0, points_left=True)
+    got = sorted((r.id_left, r.id_right) for r in out.df.collect())
+    chain = [(a, b) for a, b in _when_chain_pairs(mixed_df, predicate)
+             if gt[a] == 0]
+    want = [(a, b) for a, b in chain if gt[b] in (0, 3, 6)]
+    assert len(want) > 50
+    assert got == want
+    if predicate == "intersects":
+        # the chain's kernel fallback matches points on lines, which
+        # points_left drops
+        assert len(chain) > len(want)
 
 
 def test_kernel_refine_plan_shape(mixed_df):
     """The default polygon join plans one Python node, a refine Filter
     without lambda HOFs, and join metadata of bounds and cells only;
-    the pure-JVM sat mode still plans no Python node (and keeps its
-    shape flags)."""
+    the pure-JVM points_left join plans no Python node and carries the
+    rect flag on its right side only."""
     out = spatial_join(mixed_df, mixed_df, cell_size=3.0).df
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1
@@ -690,17 +635,16 @@ def test_kernel_refine_plan_shape(mixed_df):
     assert len(refine) == 1
     assert "lambdafunction" not in refine[0]
     assert ", rect, " not in plan and ", cvx, " not in plan
-    sat = spatial_join(mixed_df, mixed_df, cell_size=3.0, udf_refine=False,
-                       convex_refine="sat").df
-    plan = sat._jdf.queryExecution().executedPlan().toString()
+    points = mixed_df.where(F.col("geometry.gt") == 0)
+    pip = spatial_join(points, mixed_df, cell_size=3.0,
+                       points_left=True).df
+    plan = pip._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
-    assert ", rect, " in plan and ", cvx, " in plan
+    assert ", rect, " in plan and ", cvx, " not in plan
 
 
 @pytest.mark.parametrize("predicate", ["intersects", "contains"])
-@pytest.mark.parametrize("general", [True, False])
-def test_kernel_refine_nan_matches_when_chain(mixed_nan_df, predicate,
-                                              general):
+def test_kernel_refine_nan_matches_when_chain(mixed_nan_df, predicate):
     """With NaN coordinates the kernel keeps exactly the pairs of the
     `when` chain: it compares doubles in Catalyst's order (NaN above
     every number, NaN = NaN). Both refines read one bbox candidate set:
@@ -709,9 +653,9 @@ def test_kernel_refine_nan_matches_when_chain(mixed_nan_df, predicate,
     from arctic_spark.functions import udfs
     cand = _bbox_candidates(mixed_nan_df, predicate)
     got = _pairs(cand.where(F.coalesce(
-        udfs.join_refine(F.col("ga"), F.col("gb"), predicate,
-                         general=general), F.lit(False))))
-    want = _pairs(cand.where(_when_chain(predicate, general)))
+        udfs.join_refine(F.col("ga"), F.col("gb"), predicate),
+        F.lit(False))))
+    want = _pairs(cand.where(_when_chain(predicate)))
     # the NaN points equal each other in Catalyst
     assert (1000, 1001) in want
     assert sum(a >= 1000 or b >= 1000 for a, b in want) > 5

@@ -247,3 +247,35 @@ def test_line_ref_stats_matches_native(spark):
                   "seg_len", "rev_x", "rev_y"):
             a, b = getattr(nat_r[i], f), getattr(fus_r[i], f)
             assert a == b or (a is None and b is None), (i, f, a, b)
+
+
+def test_sequential_row_sums_skewed():
+    """The line_ref_stats length fold on a skewed batch (one 100k-value
+    row among 1k short rows, plus an empty row): bit-equal to a Python
+    left-to-right sum, with memory near the input size, not rows x the
+    longest row (a single padded matrix would need ~800 MB here)."""
+    import tracemalloc
+
+    import numpy as np
+
+    from arctic_spark.functions.udfs import sequential_row_sums
+    rng = np.random.default_rng(5)
+    counts = rng.integers(1, 9, 1001)
+    counts[500] = 100_000
+    counts[7] = 0
+    vals = rng.uniform(0.0, 3.0, int(counts.sum())) ** 3
+    want, i = [], 0
+    for c in counts:
+        s = 0.0
+        for v in vals[i:i + c]:
+            s += float(v)
+        want.append(s)
+        i += c
+    tracemalloc.start()
+    try:
+        got = sequential_row_sums(vals, counts)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert got.tolist() == want
+    assert peak < 16 * vals.nbytes

@@ -148,8 +148,8 @@ def test_streaming_spatial_join_static_side(spark, tmp_path):
         "string_col string, wkt string") \
         .select("string_col", st.from_wkt("wkt").alias("geometry"))
     joined = spatial_join(GeoDataFrame(stream), GeoDataFrame(polys),
-                          cell_size=8.0, udf_refine=False,
-                          points_left=True, broadcast_right=True)
+                          cell_size=8.0, points_left=True,
+                          broadcast_right=True)
     q = (joined.df.select("pid_left", "string_col_right")
          .writeStream.format("memory").queryName("stream_sj")
          .outputMode("append").start())
